@@ -37,7 +37,7 @@ object JobProbe {
     // stage → job attribution uses SparkListenerJobStart.stageIds — the
     // EXACT mapping (r21 ADVICE; the old newest-unfinished-job heuristic
     // misattributed under AQE-spawned concurrent jobs)
-    val stageToJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+    val stageToJob = new java.util.concurrent.ConcurrentHashMap[Int, Integer]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         // description when set, else the short callsite — names the
@@ -63,8 +63,8 @@ object JobProbe {
       }
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
         val info = e.stageInfo
-        val jid = stageToJob.get(info.stageId)
-        val r = if (stageToJob.containsKey(info.stageId)) jobs.get(jid) else null
+        val jid = stageToJob.get(info.stageId) // null: stage of no recorded job
+        val r = if (jid != null) jobs.get(jid.intValue) else null
         if (r != null) { r.tasks += info.numTasks; r.stages += 1 }
       }
     }

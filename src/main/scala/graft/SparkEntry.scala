@@ -76,9 +76,13 @@ object SparkEntry {
     * THUNK) — `shipped` is deferred because constructing it is not
     * free (qualityBuckets' maxDistinct guard runs an eager bounded
     * collect over the whole chain) and the stream row needs only the
-    * first three. */
-  private def pretrainChain(s: SparkSession, d: String)
+    * first three. `cut = false` drops the two stage seams below — the
+    * same values through one un-cut plan, which is what PlanShapeSpec's
+    * composition guard inspects (a cut roots the plan at `LogicalRDD`
+    * and hides the stages above it). */
+  private[graft] def pretrainChain(s: SparkSession, d: String, cut: Boolean = true)
       : (DataFrame, DataFrame, DataFrame, () => DataFrame) = {
+    def seam(df: DataFrame) = if (cut) df.localCheckpoint(false) else df
     val docs = Tables(s, d, "documents")
     // LAZY stage-seam cuts (r22, guide §2.4/§5 — the cuts the _substr
     // variants always had): un-cut, every downstream consumer embeds
@@ -89,14 +93,13 @@ object SparkEntry {
     // action, the lmScore fit, the lang join, and qualityBuckets'
     // two consumers each still re-planned and partially re-executed
     // the chain. Cut at dd and clean, the plan is LogicalRDD-rooted
-    // past each seam (23 lines after — _after.txt) and each stage
-    // executes once. Lazy (eager = false): plan-only consumers run no
-    // jobs; values are unchanged (the stages are deterministic).
-    val dd = Dedup.dedupParagraphs(docs.where(col("doc_id") % 7 =!= 0),
-      "text", "doc_id", sep = " the ").localCheckpoint(false)
+    // past each seam (plans/r22/pipeline_pretrain_after.txt) and each
+    // stage executes once. Lazy (eager = false): plan-only consumers run
+    // no jobs; values are unchanged (the stages are deterministic).
+    val dd = seam(Dedup.dedupParagraphs(docs.where(col("doc_id") % 7 =!= 0),
+      "text", "doc_id", sep = " the "))
     val evalSet = docs.where(col("doc_id") % 7 === 0)
-    val clean = Dedup.decontaminate(dd, evalSet, "text", "doc_id", n = 13)
-      .localCheckpoint(false)
+    val clean = seam(Dedup.decontaminate(dd, evalSet, "text", "doc_id", n = 13))
     def shipped() = {
       val scored = TextAnalysis.lmScore(clean, "text", "doc_id")
         .join(clean.select(col("doc_id"), col("lang")), "doc_id")

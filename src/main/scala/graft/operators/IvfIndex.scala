@@ -156,30 +156,10 @@ class IvfIndex private (
       batchId: Long, compactFilesPerCell: Int, targetFileBytes: Long,
       crashPoint: Int): Boolean = {
     val spark = batch.sparkSession
-    // layout refusal FIRST (appendToSaved itself is deliberately
-    // unchecked — it is the primitive): ingesting into a path that was
-    // never save()d would grow a data tree no load() can ever open
-    try IvfIndex.readSidecar(spark, path, "_ivf.json")
-    catch {
-      // only the not-a-layout signals re-wrap (the AnnIndex.open
-      // convention); genuine IO errors propagate
-      case e @ (_: java.io.FileNotFoundException | _: IllegalArgumentException) =>
-        throw new IllegalArgumentException(
-        s"$path is not a saved vector-tier IVF layout (no readable " +
-          "_ivf.json sidecar) — save(path) first; ingestBatch appends " +
-          "into an existing layout", e)
-    }
-    // crashed-repair refusal (r20 ADVICE): appending into a layout that
-    // is missing its hot cells' rows would bury the incompleteness
-    // under fresh batches
-    val sentinel = new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(path), IvfIndex.RepairSentinel)
-    require(!sentinel.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(sentinel),
-      s"$path carries ${IvfIndex.RepairSentinel} — a repairSaved crashed " +
-        "mid-rewrite and the layout is missing rows; restore from a " +
-        "snapshot (then delete the sentinel) before ingesting")
     IvfIndex.ingestBatchSkeleton(spark, path, batch, batchId,
+      // (appendToSaved itself is deliberately unchecked — it is the
+      // primitive); a crashed repair's sentinel refuses here too
+      refuse = () => IvfIndex.requireSaved(spark, path): Unit,
       guard = () => (),
       stage = p => IvfIndex.assignWithCentroids(batch, embCol, centroidVectors)
         .write.mode("overwrite").partitionBy("cell").parquet(p),
@@ -217,10 +197,12 @@ class IvfIndex private (
     * two `search` signatures would otherwise be overload-ambiguous —
     * the documented reason this tier stayed off the trait until the
     * adapter. The refine forms re-rank the shortlist on raw vectors
-    * exactly like the coded tiers; over this tier's already-exact
+    * exactly like the coded tiers (the [[AnnIndex]] trait's one
+    * implementation); over this tier's already-exact
     * scores they change membership never, order only through
     * tie-breakers (spec'd `searchRefine == search` at n = k ≤
-    * shortlist) — they exist so trait consumers compose uniformly.
+    * shortlist) — they are the trait's own, so trait consumers compose
+    * uniformly.
     *
     * Exactness anchor: nprobe = nlist probes every cell with EXACT
     * scores, so every trait form equals brute force — and unlike the
@@ -242,33 +224,6 @@ class IvfIndex private (
           simCol: String): DataFrame =
         self.searchMany(queries, queryIdCol, queryEmbCol, corpusIdCol, k,
           nprobe, simCol)
-      override def searchRefine(raw: DataFrame, idCol: String,
-          embCol: String, queryVec: Array[Float], n: Int, shortlist: Int,
-          nprobe: Int, simCol: String, tieBreakers: Seq[Column],
-          maxShortlist: Int): DataFrame = {
-        require(n >= 1 && shortlist >= n,
-          s"need shortlist ($shortlist) >= n ($n) >= 1")
-        require(shortlist <= maxShortlist,
-          s"shortlist $shortlist exceeds maxShortlist $maxShortlist — the " +
-            "re-rank's id predicate is built from a driver-collected id " +
-            "list; raise maxShortlist deliberately or shrink the shortlist")
-        val shortIds = search(queryVec, shortlist, nprobe, simCol, tieBreakers)
-          .select(col(idCol)).collect().map(_.get(0))
-        PqIndex.refineByIds(raw, idCol, embCol, queryVec, n, shortIds,
-          simCol, tieBreakers)
-      }
-      override def searchManyRefine(queries: DataFrame, queryIdCol: String,
-          queryEmbCol: String, raw: DataFrame, corpusIdCol: String,
-          corpusEmbCol: String, n: Int, shortlist: Int, nprobe: Int,
-          simCol: String): DataFrame = {
-        require(n >= 1 && shortlist >= n,
-          s"need shortlist ($shortlist) >= n ($n) >= 1")
-        IvfPqIndex.refineManyFromShortlists(
-          searchMany(queries, queryIdCol, queryEmbCol, corpusIdCol,
-            k = shortlist, nprobe = nprobe, simCol = simCol),
-          queries, queryIdCol, queryEmbCol, raw, corpusIdCol, corpusEmbCol,
-          n, simCol)
-      }
       override def cellSizeStats: DataFrame = self.cellSizeStats
       override def probesMany(queries: DataFrame, queryIdCol: String,
           queryEmbCol: String, nprobe: Int): DataFrame =
@@ -277,34 +232,13 @@ class IvfIndex private (
     }
   }
 
-  /**
-   * Refuse-don't-degrade guard for append drift: if the fullest cell
-   * holds more than `maxFactor` × the average, probe cost is no longer
-   * ≈ nprobe/nlist of the corpus (a zipf-drifted append concentrates
-   * the scan in hot cells — measured in ScaleProbe) and the quantizer
-   * should be re-fit. Throws with the offending cells; returns the
-   * max/avg factor when healthy. Cells with NO rows count toward the
-   * average (an empty cell is exactly what drift looks like).
-   */
-  def driftGuard(maxFactor: Double = 8.0): Double = {
-    require(maxFactor > 1.0, s"maxFactor must exceed 1, got $maxFactor")
-    val Array(total, maxN) = cellSizeStats
-      .agg(sum(col("n")), max(col("n"))).head() match {
-      case r => Array(r.getLong(0), r.getLong(1))
-    }
-    val avg = total.toDouble / centroidVectors.length
-    val factor = if (avg == 0) 0.0 else maxN / avg
-    if (factor > maxFactor) {
-      val hot = cellSizeStats.where(col("n") > avg * maxFactor)
-        .orderBy(desc("n")).limit(5).collect()
-        .map(r => s"cell ${r.getInt(0)}: ${r.getLong(1)} rows").mkString("; ")
-      throw new IllegalStateException(
-        f"IVF cell imbalance $factor%.1f× exceeds $maxFactor%.1f× the " +
-          f"average ($avg%.0f rows/cell) — appended data has drifted from " +
-          s"the frozen quantizer; re-fit (IvfIndex.build) or split hot cells [$hot]")
-    }
-    factor
-  }
+  /** Refuse-don't-degrade guard for append drift — the family's one
+    * [[IvfIndex.imbalanceGuard]] over this tier's cell sizes. Throws
+    * with the offending cells; returns the max/avg factor when
+    * healthy. */
+  def driftGuard(maxFactor: Double = 8.0): Double =
+    IvfIndex.imbalanceGuard(cellSizeStats, centroidVectors.length, maxFactor,
+      "IVF", "IvfIndex.build")
 
   /**
    * Cell-size cap, one pass: every cell holding more than `maxRows`
@@ -412,7 +346,7 @@ class IvfIndex private (
     writePartitioned(s"$path/data")
     centroids.coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
     IvfIndex.writeSidecar(indexed.sparkSession, path, "_ivf.json",
-      s"""{"embedding_column": "$embCol", "nlist": ${centroidVectors.length}}""")
+      "embedding_column" -> embCol, "nlist" -> centroidVectors.length)
   }
 }
 
@@ -439,14 +373,17 @@ object IvfIndex {
       .take(nprobe).map(_._2)
   }
 
-  /** Double-accumulated plain dot product, driver-side — the per-cell
-    * `q·centroid` addend of residual-coded ADC ([[IvfPqIndex.search]]). */
   /** The tier-independent skeleton every streaming ingest shares,
     * EXACTLY-ONCE since round 20 (r19 VERDICT #1 — the marker-after-
     * append protocol replayed one batch as duplicate rows across the
     * append-commit→marker crash window). The stage-then-promote
     * protocol per batch:
     *
+    * 0. `refuse()` — the tier's saved-layout refusal, before anything
+    *    else (a replay into the wrong layout refuses too): ingesting
+    *    into a path that was never save()d would grow a data tree no
+    *    load() can open, and the OPQ stack also refuses a layout saved
+    *    under a different rotation.
     * 1. REPLAY PROBE — `$markerRoot/_ingest/batch_<id>.json` present
     *    means the batch COMMITTED. If its staging directory still
     *    exists the promotion crashed mid-move: finish it (each file
@@ -487,9 +424,10 @@ object IvfIndex {
     * [[InjectedIngestCrash]]; production callers leave it 0. */
   private[operators] def ingestBatchSkeleton(
       spark: org.apache.spark.sql.SparkSession, markerRoot: String,
-      batch: DataFrame, batchId: Long, guard: () => Unit,
+      batch: DataFrame, batchId: Long, refuse: () => Unit, guard: () => Unit,
       stage: String => Unit, dataTreeRoot: String, compact: () => Unit,
       compactFilesPerCell: Int, crashPoint: Int = 0): Boolean = {
+    refuse()
     require(batchId >= 0L, s"batchId must be >= 0, got $batchId")
     require(compactFilesPerCell >= 1,
       s"compactFilesPerCell must be >= 1, got $compactFilesPerCell")
@@ -519,7 +457,7 @@ object IvfIndex {
     stage(staging.toString)
     if (crashPoint == 1) throw new InjectedIngestCrash
     writeSidecar(spark, s"$markerRoot/_ingest", s"batch_$batchId.json",
-      s"""{"batch_id": $batchId}""")
+      "batch_id" -> batchId)
     if (crashPoint == 2) throw new InjectedIngestCrash
     promoteStaged(fs, staging, dataDir, batchId)
     cadence()
@@ -577,7 +515,7 @@ object IvfIndex {
   /** [[recoverIngestSweep]] for a saved VECTOR-tier layout. */
   def recoverIngest(spark: org.apache.spark.sql.SparkSession,
       path: String): (Seq[Long], Seq[Long]) = {
-    readSidecar(spark, path, "_ivf.json") // layout refusal first
+    requireSaved(spark, path)
     recoverIngestSweep(spark, path, path)
   }
 
@@ -638,6 +576,8 @@ object IvfIndex {
       .select(col(queryIdCol), col("cell").cast("int").as("cell"))
   }
 
+  /** Double-accumulated plain dot product, driver-side — the per-cell
+    * `q·centroid` addend of residual-coded ADC ([[IvfPqIndex.search]]). */
   private[operators] def dotLocal(a: Array[Float], b: Array[Float]): Double = {
     val n = math.min(a.length, b.length)
     var d = 0.0; var i = 0
@@ -792,7 +732,7 @@ object IvfIndex {
     // refresh the layout is incomplete, and a crash must leave that
     // fact on disk where load() can refuse on it
     writeSidecar(spark, path, RepairSentinel,
-      s"""{"repairing": true, "max_rows": $maxRows}""")
+      "repairing" -> true, "max_rows" -> maxRows)
     // delete exactly the split cells' old directories (sub-0 reuses the
     // hot id, so its dir is deleted and rewritten; tail ids are new)
     hot.foreach { c =>
@@ -802,7 +742,7 @@ object IvfIndex {
     reassigned.write.mode("append").partitionBy("cell").parquet(s"$path/data")
     split.centroids.coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
     writeSidecar(spark, path, "_ivf.json",
-      s"""{"embedding_column": "${idx.embCol}", "nlist": ${split.centroidVectors.length}}""")
+      "embedding_column" -> idx.embCol, "nlist" -> split.centroidVectors.length)
     fs.delete(new org.apache.hadoop.fs.Path(
       new org.apache.hadoop.fs.Path(path), RepairSentinel), false)
     load(spark, path)
@@ -815,13 +755,21 @@ object IvfIndex {
   private[graft] val RepairSentinel = "_repair_in_progress"
 
   /** Sidecar write through the SAME Hadoop FileSystem that owns the
-    * layout's `cell=` directories (r13 ADVICE): the repair path
+    * layout's `cell=` directories (r13 ADVICE), and the family's one
+    * sidecar FORMAT: a flat JSON object of `fields` in order, strings
+    * quoted and everything else bare (`"by_residual": "false"` is
+    * quoted because the writer passes it as a string — the bytes
+    * r16–r22 layouts carry). The repair path
     * deletes data partitions through that FS, and a `java.nio` sidecar
     * write on a non-local path (`hdfs://`, `s3a://`) would fail — or
     * land on the driver's local disk — AFTER the destructive rewrite,
     * leaving the layout describing itself with a stale quantizer. */
   private[operators] def writeSidecar(spark: org.apache.spark.sql.SparkSession,
-      dir: String, name: String, json: String): Unit = {
+      dir: String, name: String, fields: (String, Any)*): Unit = {
+    val json = fields.map {
+      case (k, v: String) => s""""$k": "$v""""
+      case (k, v) => s""""$k": $v"""
+    }.mkString("{", ", ", "}")
     val dirPath = new org.apache.hadoop.fs.Path(dir)
     val fs = dirPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(dirPath)
@@ -1038,7 +986,7 @@ object IvfIndex {
   /** [[dataTreeStats]] for a saved VECTOR-tier layout. */
   def layoutStats(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame = {
-    readSidecar(spark, path, "_ivf.json") // layout refusal first
+    requireSaved(spark, path)
     dataTreeStats(spark, path)
   }
 
@@ -1048,7 +996,7 @@ object IvfIndex {
     * rewrite). */
   def compactSaved(spark: org.apache.spark.sql.SparkSession, path: String,
       targetFileBytes: Long = 128L << 20): Unit = {
-    readSidecar(spark, path, "_ivf.json") // layout refusal first
+    requireSaved(spark, path)
     compactDataTree(spark, path, targetFileBytes)
   }
 
@@ -1065,12 +1013,38 @@ object IvfIndex {
     new String(buf, java.nio.charset.StandardCharsets.UTF_8)
   }
 
-  /** Reopen a saved index. The data scan comes from the cell-partitioned
-    * layout, so subsequent probe filters prune at the file level.
-    * Refuses while a [[repairSaved]] crash sentinel exists: the layout
-    * is missing its hot cells' rows, and serving it would silently
-    * return wrong neighbors (r20 ADVICE). */
-  def load(spark: org.apache.spark.sql.SparkSession, path: String): IvfIndex = {
+  /** [[writeSidecar]]'s field reader: the value of `name` in a sidecar
+    * the family wrote, quoted (`"codes_column": "pq_codes"`) or bare
+    * (`"nlist": 16`, `"codec_baseline": 0.97`). */
+  private[graft] def sidecarField(json: String, name: String): Option[String] =
+    raw""""$name"\s*:\s*(?:"([^"]*)"|([^,}\s]+))""".r.findFirstMatchIn(json)
+      .map(m => Option(m.group(1)).getOrElse(m.group(2)))
+
+  /** The family's one saved-layout refusal: `$path` must carry a
+    * readable `sidecar`, else refuse BY NAME (a write into a path that
+    * was never save()d would grow a tree no load() can open). Only the
+    * not-a-layout signals re-wrap — a missing sidecar and
+    * [[readSidecar]]'s wrong-file refusal, the [[AnnIndex.open]]
+    * convention; genuine IO errors propagate. Returns the sidecar. */
+  private[operators] def requireLayout(spark: org.apache.spark.sql.SparkSession,
+      path: String, sidecar: String, what: String, hint: String): String =
+    try readSidecar(spark, path, sidecar)
+    catch {
+      case e @ (_: java.io.FileNotFoundException | _: IllegalArgumentException) =>
+        throw new IllegalArgumentException(
+          s"$path is not $what (no readable $sidecar sidecar) — $hint", e)
+    }
+
+  /** The vector tier's layout refusal, run first by [[load]], ingest and
+    * the maintenance entry points: [[requireLayout]] on `_ivf.json`,
+    * then the crashed-repair refusal (r20 ADVICE) — while a
+    * [[repairSaved]] sentinel exists the layout is missing its hot
+    * cells' rows, and serving or appending to it would silently return
+    * wrong neighbors or bury the gap under fresh batches. */
+  private[operators] def requireSaved(spark: org.apache.spark.sql.SparkSession,
+      path: String): String = {
+    val json = requireLayout(spark, path, "_ivf.json",
+      "a saved vector-tier IVF layout", "save(path) first")
     val sentinel = new org.apache.hadoop.fs.Path(
       new org.apache.hadoop.fs.Path(path), RepairSentinel)
     require(!sentinel.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1078,10 +1052,44 @@ object IvfIndex {
       s"$path carries $RepairSentinel — a repairSaved crashed between its " +
         "hot-cell deletes and the reassigned append, so the layout is " +
         "missing rows; restore the layout from a snapshot (then delete the " +
-        "sentinel) instead of serving an incomplete corpus")
-    val json = readSidecar(spark, path, "_ivf.json")
-    val embCol = """"embedding_column"\s*:\s*"([^"]*)"""".r
-      .findFirstMatchIn(json).map(_.group(1)).getOrElse("embedding")
+        "sentinel) instead of serving or ingesting into an incomplete corpus")
+    json
+  }
+
+  /** Refuse-don't-degrade guard for append drift, shared by every tier's
+    * `driftGuard`: if the fullest cell holds more than `maxFactor` × the
+    * average, probe cost is no longer ≈ nprobe/nlist of the corpus (a
+    * zipf-drifted append concentrates the scan in hot cells — measured
+    * in ScaleProbe) and the quantizer should be re-fit (`remedy`) or
+    * its hot cells split. Throws naming the tier (`label`) and up to
+    * five hot cells; returns the max/avg factor when healthy. Cells
+    * with NO rows count toward the average (an empty cell is exactly
+    * what drift looks like). */
+  private[operators] def imbalanceGuard(cellSizeStats: DataFrame, nlist: Int,
+      maxFactor: Double, label: String, remedy: String): Double = {
+    require(maxFactor > 1.0, s"maxFactor must exceed 1, got $maxFactor")
+    val r = cellSizeStats.agg(sum(col("n")), max(col("n"))).head()
+    val avg = r.getLong(0).toDouble / nlist
+    val factor = if (avg == 0) 0.0 else r.getLong(1) / avg
+    if (factor > maxFactor) {
+      val hot = cellSizeStats.where(col("n") > avg * maxFactor)
+        .orderBy(desc("n")).limit(5).collect()
+        .map(r => s"cell ${r.getInt(0)}: ${r.getLong(1)} rows").mkString("; ")
+      throw new IllegalStateException(
+        f"$label cell imbalance $factor%.1f× exceeds $maxFactor%.1f× the " +
+          f"average ($avg%.0f rows/cell) — appended data has drifted from " +
+          s"the frozen quantizer; re-fit ($remedy) or split hot cells [$hot]")
+    }
+    factor
+  }
+
+  /** Reopen a saved index. The data scan comes from the cell-partitioned
+    * layout, so subsequent probe filters prune at the file level.
+    * Refuses through [[requireSaved]] — including while a
+    * [[repairSaved]] crash sentinel exists. */
+  def load(spark: org.apache.spark.sql.SparkSession, path: String): IvfIndex = {
+    val embCol = sidecarField(requireSaved(spark, path), "embedding_column")
+      .getOrElse("embedding")
     // by-name read: a rewritten centroids file with reordered columns
     // must fail by name, not silently misread by ordinal
     val cents = spark.read.parquet(s"$path/centroids")

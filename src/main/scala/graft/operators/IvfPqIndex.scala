@@ -110,33 +110,6 @@ class IvfPqIndex private (
     }
   }
 
-  /** [[search]] + EXACT re-rank over the raw vectors — the refine
-    * stage ([[PqIndex.searchRefine]]'s contract) composed with cell
-    * pruning: the coded pass scans nprobe/nlist of the codes, the
-    * re-rank touches only `shortlist` raw rows through a pushed id
-    * predicate. Composed exactness: nprobe = nlist ∘ lossless ⇒ the
-    * shortlist holds the true top-n ⇒ provably brute force (shares
-    * `nearest_cosine`'s oracle); at the deployed lossy config the
-    * shortlist recall is the probe's and the re-rank restores exact
-    * ORDER and exact SCORES on it (spec-measured ≥ the bare ADC
-    * ranking). `raw` must be the same corpus keyed by `idCol`. */
-  override def searchRefine(raw: DataFrame, idCol: String, embCol: String,
-      queryVec: Array[Float], n: Int, shortlist: Int, nprobe: Int,
-      simCol: String, tieBreakers: Seq[Column],
-      maxShortlist: Int): DataFrame = {
-    require(n >= 1 && shortlist >= n,
-      s"need shortlist ($shortlist) >= n ($n) >= 1")
-    require(shortlist <= maxShortlist,
-      s"shortlist $shortlist exceeds maxShortlist $maxShortlist — the re-rank's " +
-        "id predicate is built from a driver-collected id list; raise " +
-        "maxShortlist deliberately or shrink the shortlist")
-    val shortIds = search(queryVec, shortlist, nprobe, simCol, tieBreakers)
-      .select(col(idCol))
-      .collect().map(_.get(0))
-    PqIndex.refineByIds(raw, idCol, embCol, queryVec, n, shortIds, simCol,
-      tieBreakers)
-  }
-
   /**
    * Batch ANN over the coded corpus: top-k for a whole TABLE of
    * queries, fully distributed — [[IvfIndex.searchMany]]'s plan shape
@@ -197,33 +170,6 @@ class IvfPqIndex private (
       .select(col(queryIdCol), col("__e.id").as(corpusIdCol), col("__e.score").as(simCol))
   }
 
-  /** BATCH refine — [[searchRefine]] for a whole TABLE of queries,
-    * FULLY distributed (unlike the single-query form there is no
-    * driver id-collect at all): [[searchMany]]'s ADC pass shortlists
-    * `shortlist` coded candidates per query (bounded heaps, cell
-    * pruning, code-width shuffle bytes), the shortlist frame — the
-    * only thing that leaves the coded tier, n_queries·shortlist rows
-    * of (query id, corpus id) — joins the RAW vectors by id (only
-    * matching raw rows survive the corpus side), queries broadcast
-    * back for the exact cosine, and the per-query top-n is the same
-    * bounded-heap aggregate. Scores ship EXACT; recall is the
-    * shortlist's. At nprobe = nlist ∘ lossless ∘ shortlist ≥ n the
-    * shortlist provably holds every true top-n, so the result equals
-    * the exact k-NN join (the `ann_ivfpq_refine_batch_exact` gate row
-    * shares `simjoin_knn`'s oracle). */
-  override def searchManyRefine(queries: DataFrame, queryIdCol: String,
-      queryEmbCol: String, raw: DataFrame, corpusIdCol: String,
-      corpusEmbCol: String, n: Int, shortlist: Int, nprobe: Int,
-      simCol: String): DataFrame = {
-    require(n >= 1 && shortlist >= n,
-      s"need shortlist ($shortlist) >= n ($n) >= 1")
-    IvfPqIndex.refineManyFromShortlists(
-      searchMany(queries, queryIdCol, queryEmbCol, corpusIdCol,
-        k = shortlist, nprobe = nprobe, simCol = simCol),
-      queries, queryIdCol, queryEmbCol, raw, corpusIdCol, corpusEmbCol,
-      n, simCol)
-  }
-
   /**
    * Incremental maintenance: assign a NEW batch to the FROZEN coarse
    * quantizer, encode it with the FROZEN PQ codebooks, and fold the
@@ -280,20 +226,30 @@ class IvfPqIndex private (
     * codebooks — cos(v, q(v)) over the deterministic hash-ordered
     * sample (bounded by `maxSample`), residual-staged under
     * `byResidual` so the number measures exactly the quantity the
-    * codes store. [[OpqIvfPqIndex.codecSelfSimilarity]] is this
-    * measurement behind the rotation; the PLAIN tier's codebooks go
-    * stale the same way under distribution drift (cell occupancy can
-    * stay balanced while reconstruction quality collapses — the drift
-    * [[driftGuard]] cannot see). Unlike the OPQ stack, this tier
-    * persists no build-time baseline: measure one on the build corpus
-    * while its raw vectors still exist, and keep it with the layout. */
+    * codes store. The codebooks go stale under distribution drift
+    * (cell occupancy can stay balanced while reconstruction quality
+    * collapses — the drift [[driftGuard]] cannot see). Unlike the OPQ
+    * stack, this tier persists no build-time baseline: measure one on
+    * the build corpus while its raw vectors still exist, and keep it
+    * with the layout. */
   def codecSelfSimilarity(df: DataFrame, embCol: String,
-      maxSample: Int = 65536): Double = {
+      maxSample: Int = 65536): Double =
+    measureCodec(df, embCol, maxSample, identity)
+
+  /** The family's one codec measurement: take the sample on the RAW
+    * column ordered by `xxhash64` (the [[PqIndex.fit]] sampling
+    * convention), map it into the coded space with `pretransform` (the
+    * OPQ stack's rotation; identity here), then assign + subtract the
+    * residual under `byResidual` exactly as encode stages it. Sampling
+    * before the pretransform is what keeps the OPQ stack's persisted
+    * `codec_baseline` values comparable across versions. */
+  private[operators] def measureCodec(df: DataFrame, embCol: String,
+      maxSample: Int, pretransform: DataFrame => DataFrame): Double = {
     require(maxSample >= 1, s"maxSample must be >= 1, got $maxSample")
     require(embCol != "__resid" && embCol != "__codec_sim",
       s"'$embCol' collides with a reserved codec staging column — rename it")
-    val sample = df.select(col(embCol)).where(col(embCol).isNotNull)
-      .orderBy(xxhash64(col(embCol))).limit(maxSample)
+    val sample = pretransform(df.select(col(embCol)).where(col(embCol).isNotNull)
+      .orderBy(xxhash64(col(embCol))).limit(maxSample))
     val perRow =
       if (!byResidual)
         PqIndex.selfSimilarity(sample, embCol, model, "__codec_sim")
@@ -310,34 +266,17 @@ class IvfPqIndex private (
     r.getAs[Double]("m")
   }
 
-  /** Codebook STALENESS guard for appends — the
-    * [[OpqIvfPqIndex.codecGuard]] bands (quiet / warn / refuse with
-    * the re-fit remedy) on the plain coded tier. `baselineSelfSim` is
-    * REQUIRED here (this tier persists none): measure it with
-    * [[codecSelfSimilarity]] on the build corpus. */
+  /** Codebook STALENESS guard for appends — [[IvfPqIndex.codecBands]]
+    * (quiet / warn / refuse with the re-fit remedy) on the plain coded
+    * tier. `baselineSelfSim` is REQUIRED here (this tier persists
+    * none): measure it with [[codecSelfSimilarity]] on the build
+    * corpus. */
   def codecGuard(batch: DataFrame, embCol: String, baselineSelfSim: Double,
       warnDrop: Double = 0.02, refuseDrop: Double = 0.05,
-      maxSample: Int = 65536): Option[String] = {
-    require(baselineSelfSim >= -1.0 && baselineSelfSim <= 1.0,
-      s"baselineSelfSim must be a cosine in [-1, 1], got $baselineSelfSim")
-    require(warnDrop > 0 && warnDrop <= refuseDrop,
-      s"need 0 < warnDrop <= refuseDrop, got ($warnDrop, $refuseDrop)")
-    val got = codecSelfSimilarity(batch, embCol, maxSample)
-    val drop = baselineSelfSim - got
-    if (drop > refuseDrop) throw new IllegalStateException(
-      f"PQ codec self-similarity $got%.4f on this batch is $drop%.4f below " +
-        f"the baseline $baselineSelfSim%.4f (refuse threshold " +
-        f"$refuseDrop%.3f): the batch's distribution has drifted from the " +
-        "FROZEN codebooks, so its codes would serve with silently degraded " +
-        "recall. Re-fit (IvfPqIndex.build) on the grown corpus — refusing " +
-        "to append under stale codebooks")
-    else if (drop > warnDrop) Some(
-      f"WARNING: PQ codec self-similarity $got%.4f is $drop%.4f below the " +
-        f"baseline $baselineSelfSim%.4f (warn threshold $warnDrop%.3f) — " +
-        "the codebooks are going stale for incoming data; plan a re-fit " +
-        f"before the refuse threshold ($refuseDrop%.3f)")
-    else None
-  }
+      maxSample: Int = 65536): Option[String] =
+    IvfPqIndex.codecBands(codecSelfSimilarity(batch, embCol, maxSample),
+      baselineSelfSim, warnDrop, refuseDrop, "PQ", "codebooks",
+      "IvfPqIndex.build")
 
   /** Guarded per-batch INGEST into a saved plain-IVFADC layout — the
     * [[OpqIvfPqIndex.ingestBatch]] maintenance loop (replay markers
@@ -363,21 +302,8 @@ class IvfPqIndex private (
       warnSink: String => Unit, compactFilesPerCell: Int,
       targetFileBytes: Long, crashPoint: Int): Boolean = {
     val spark = batch.sparkSession
-    // layout refusal FIRST (the OPQ stack's ingest gets this from its
-    // rotation verification; the plain tier checks its own sidecar):
-    // ingesting into a never-saved path would grow an unloadable tree
-    try IvfIndex.readSidecar(spark, path, "_ivfpq.json")
-    catch {
-      // only the not-a-layout signals re-wrap (the AnnIndex.open
-      // convention); genuine IO errors propagate
-      case e @ (_: java.io.FileNotFoundException | _: IllegalArgumentException) =>
-        throw new IllegalArgumentException(
-        s"$path is not a saved IVFADC layout (no readable _ivfpq.json " +
-          "sidecar) — save(path) first; ingestBatch appends into an " +
-          "existing layout (an OPQ∘IVFADC stack ingests through " +
-          "OpqIvfPqIndex.ingestBatch)", e)
-    }
     IvfIndex.ingestBatchSkeleton(spark, path, batch, batchId,
+      refuse = () => IvfPqIndex.requireSaved(spark, path): Unit,
       guard = () => codecGuard(batch, embCol, baselineSelfSim).foreach(warnSink),
       stage = p => stageEncoded(p, batch, embCol),
       dataTreeRoot = path,
@@ -385,7 +311,7 @@ class IvfPqIndex private (
       compactFilesPerCell = compactFilesPerCell, crashPoint = crashPoint)
   }
 
-  /** Same contract as [[IvfIndex.driftGuard]], over the coded corpus.
+  /** [[IvfIndex.imbalanceGuard]] over the coded corpus.
     *
     * Note on repair: unlike [[IvfIndex.splitOversized]], the coded
     * tier cannot split a hot cell itself — the split fits sub-
@@ -396,18 +322,9 @@ class IvfPqIndex private (
     * coded layout FOLLOW it ([[IvfPqIndex.repairSavedFrom]]) — no
     * re-encode is needed because codes are PQ(raw vector), not
     * PQ(residual): a cell renumbering never invalidates a code. */
-  def driftGuard(maxFactor: Double = 8.0): Double = {
-    require(maxFactor > 1.0, s"maxFactor must exceed 1, got $maxFactor")
-    val r = cellSizeStats.agg(sum(col("n")), max(col("n"))).head()
-    val avg = r.getLong(0).toDouble / centroidVectors.length
-    val factor = if (avg == 0) 0.0 else r.getLong(1) / avg
-    if (factor > maxFactor)
-      throw new IllegalStateException(
-        f"IVFADC cell imbalance $factor%.1f× exceeds $maxFactor%.1f× the " +
-          f"average ($avg%.0f rows/cell) — appended data has drifted from " +
-          "the frozen quantizer; re-fit (IvfPqIndex.build) or split hot cells")
-    factor
-  }
+  def driftGuard(maxFactor: Double = 8.0): Double =
+    IvfIndex.imbalanceGuard(cellSizeStats, nlist, maxFactor, "IVFADC",
+      "IvfPqIndex.build")
 
   /** Persist the whole index: cell-partitioned coded data (probe
     * filters prune FILES — and each file holds codes, not vectors),
@@ -420,51 +337,56 @@ class IvfPqIndex private (
     // sidecar through the layout-owning Hadoop FS, not java.nio
     // (r13 ADVICE — see IvfIndex.writeSidecar)
     IvfIndex.writeSidecar(encoded.sparkSession, path, "_ivfpq.json",
-      s"""{"codes_column": "$codesCol", "norm_column": "$normCol", """ +
-        s""""by_residual": "$byResidual", "nlist": ${centroidVectors.length}}""")
+      "codes_column" -> codesCol, "norm_column" -> normCol,
+      "by_residual" -> byResidual.toString, "nlist" -> nlist)
   }
 }
 
 object IvfPqIndex {
 
-  /** The exact re-rank tail [[IvfPqIndex.searchManyRefine]] and
-    * [[OpqIvfPqIndex.searchManyRefine]] share: join the shortlist
-    * frame's raw vectors by id, broadcast the queries back, exact
-    * cosine, per-query bounded-heap top-n. */
-  private[operators] def refineManyFromShortlists(shortlists: DataFrame,
-      queries: DataFrame, queryIdCol: String, queryEmbCol: String,
-      raw: DataFrame, corpusIdCol: String, corpusEmbCol: String,
-      n: Int, simCol: String): DataFrame = {
-    import graft.functions.TopKScored
-    import graft.functions.vectors
-    shortlists
-      .select(col(queryIdCol), col(corpusIdCol))
-      .join(raw.select(col(corpusIdCol).cast("long").as(corpusIdCol),
-        col(corpusEmbCol).as("__refine_vec")), Seq(corpusIdCol))
-      .join(broadcast(queries.select(col(queryIdCol),
-        col(queryEmbCol).as("__refine_q"))), Seq(queryIdCol))
-      .select(col(queryIdCol), col(corpusIdCol),
-        coalesce(vectors.cosine_similarity(col("__refine_vec"),
-          col("__refine_q")), lit(0.0)).as(simCol))
-      .groupBy(col(queryIdCol))
-      .agg(TopKScored.column(n)(col(simCol), col(corpusIdCol)).as("__topk"))
-      .select(col(queryIdCol), explode(col("__topk")).as("__e"))
-      .select(col(queryIdCol), col("__e.id").as(corpusIdCol),
-        col("__e.score").as(simCol))
+  /** The family's one codec-staleness band check — the
+    * [[ParaBloom.saturationGuard]] convention (quiet / warn / refuse with
+    * a named remedy). `got` is the batch's [[IvfPqIndex.codecSelfSimilarity]]
+    * (measured only after the arguments validate); a drop past
+    * `refuseDrop` below `baselineSelfSim` means the frozen `codec`
+    * (codebooks, or the OPQ rotation) no longer codes the batch's
+    * distribution, so appended codes would serve with silently degraded
+    * recall: REFUSE and name the re-fit (`remedy`). Between `warnDrop`
+    * and `refuseDrop`, return the warning for the caller's telemetry. A
+    * batch that codes BETTER than baseline is quiet — only degradation
+    * is drift. */
+  private[operators] def codecBands(got: => Double, baselineSelfSim: Double,
+      warnDrop: Double, refuseDrop: Double, label: String, codec: String,
+      remedy: String): Option[String] = {
+    require(baselineSelfSim >= -1.0 && baselineSelfSim <= 1.0,
+      s"baselineSelfSim must be a cosine in [-1, 1], got $baselineSelfSim")
+    require(warnDrop > 0 && warnDrop <= refuseDrop,
+      s"need 0 < warnDrop <= refuseDrop, got ($warnDrop, $refuseDrop)")
+    val sim = got
+    val drop = baselineSelfSim - sim
+    if (drop > refuseDrop) throw new IllegalStateException(
+      f"$label codec self-similarity $sim%.4f on this batch is $drop%.4f " +
+        f"below the baseline $baselineSelfSim%.4f (refuse threshold " +
+        f"$refuseDrop%.3f): the batch's distribution has drifted from the " +
+        s"FROZEN $codec, so its codes would serve with silently degraded " +
+        s"recall. Re-fit ($remedy) on the grown corpus — refusing to append " +
+        s"under stale $codec")
+    else if (drop > warnDrop) Some(
+      f"WARNING: $label codec self-similarity $sim%.4f is $drop%.4f below " +
+        f"the baseline $baselineSelfSim%.4f (warn threshold $warnDrop%.3f) " +
+        s"— incoming data is drifting from the frozen $codec; plan a re-fit " +
+        f"($remedy) before the refuse threshold ($refuseDrop%.3f)")
+    else None
   }
 
-  /**
-   * Build both tiers in sequence: IVF cell assignment (seed-pinned
-   * k-means, [[IvfIndex.build]]) → PQ codebook fit on the indexed
-   * corpus ([[PqIndex.fit]] — deterministic hash-ordered sample) →
-   * one codegen encode pass — then DROP the embedding column: from
-   * here on the corpus is (cell, codes, norm), never vectors.
-   */
-  /** An index over `df` from FROZEN artifacts (coarse quantizer +
-    * PQ codebooks) — the incremental-maintenance entry point
-    * ([[IvfPqIndex.addBatch]]): assignment and encoding are pure
-    * functions of (vector, artifacts), so building from any partition
-    * of the corpus and appending the rest yields the identical index. */
+  /** The plain coded tier's layout refusal ([[IvfIndex.requireLayout]]
+    * on `_ivfpq.json`), run first by [[load]], ingest and the
+    * maintenance entry points. */
+  private[operators] def requireSaved(spark: SparkSession, path: String): String =
+    IvfIndex.requireLayout(spark, path, "_ivfpq.json", "a saved IVFADC layout",
+      "save(path) first (an OPQ∘IVFADC stack is maintained through " +
+        "OpqIvfPqIndex)")
+
   /** Reserved residual staging columns refused BY NAME at the top of
     * every residual-coded entry point (r16 ADVICE): the encode-time
     * guard alone fires only AFTER build's codebook fit has already
@@ -479,6 +401,11 @@ object IvfPqIndex {
         "(__resid/__rcent/__rnorm) — rename it before building a " +
         "residual-coded index")
 
+  /** An index over `df` from FROZEN artifacts (coarse quantizer +
+    * PQ codebooks) — the incremental-maintenance entry point
+    * ([[IvfPqIndex.addBatch]]): assignment and encoding are pure
+    * functions of (vector, artifacts), so building from any partition
+    * of the corpus and appending the rest yields the identical index. */
   def withArtifacts(df: DataFrame, embCol: String,
       centroidVectors: Array[Array[Float]], model: PqModel,
       codesCol: String = "pq_codes", normCol: String = "emb_norm",
@@ -497,10 +424,9 @@ object IvfPqIndex {
 
   /** The residual column for an already-assigned frame: x − centroid
     * (float32, the FAISS convention) via a broadcast centroid join +
-    * one codegen'd `zip_with`. (`private[operators]`: the OPQ stack's
-    * [[OpqIvfPqIndex.codecSelfSimilarity]] stages the same residual
-    * for its drift telemetry.) */
-  private[operators] def withResidual(assigned: DataFrame, embCol: String,
+    * one codegen'd `zip_with` — shared by build, encode and the codec
+    * measurement. */
+  private def withResidual(assigned: DataFrame, embCol: String,
       centroidVectors: Array[Array[Float]], out: String): DataFrame = {
     val spark = assigned.sparkSession
     import spark.implicits._
@@ -533,6 +459,13 @@ object IvfPqIndex {
         .drop(embCol, "__resid", "__rnorm")
     }
 
+  /**
+   * Build both tiers in sequence: IVF cell assignment (seed-pinned
+   * k-means, [[IvfIndex.build]]) → PQ codebook fit on the indexed
+   * corpus ([[PqIndex.fit]] — deterministic hash-ordered sample) →
+   * one codegen encode pass — then DROP the embedding column: from
+   * here on the corpus is (cell, codes, norm), never vectors.
+   */
   def build(df: DataFrame, embCol: String, nlist: Int = 16, m: Int = 8,
       k: Int = 256, maxTrain: Int = 65536, seed: Long = 123L,
       codesCol: String = "pq_codes", normCol: String = "emb_norm",
@@ -652,7 +585,8 @@ object IvfPqIndex {
     rewritten.write.mode("append").partitionBy("cell").parquet(s"$path/data")
     vectorIdx.centroids.coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
     IvfIndex.writeSidecar(spark, path, "_ivfpq.json",
-      s"""{"codes_column": "${idx.codesCol}", "norm_column": "${idx.normCol}", "nlist": ${vectorIdx.centroidVectors.length}}""")
+      "codes_column" -> idx.codesCol, "norm_column" -> idx.normCol,
+      "nlist" -> vectorIdx.centroidVectors.length)
     load(spark, path)
   }
 
@@ -660,10 +594,9 @@ object IvfPqIndex {
     * layout, so probe filters prune at the file level; the PQ model
     * reloads by name via [[PqIndex.load]]. */
   def load(spark: SparkSession, path: String): IvfPqIndex = {
-    val json = IvfIndex.readSidecar(spark, path, "_ivfpq.json")
+    val json = requireSaved(spark, path)
     def field(name: String, dflt: String): String =
-      (""""""" + name + """"\s*:\s*"([^"]*)"""").r
-        .findFirstMatchIn(json).map(_.group(1)).getOrElse(dflt)
+      IvfIndex.sidecarField(json, name).getOrElse(dflt)
     val codesCol = field("codes_column", "pq_codes")
     val normCol = field("norm_column", "emb_norm")
     // layouts written before the residual option existed are raw-coded
@@ -689,14 +622,14 @@ object IvfPqIndex {
     * IO). Returns (cell, n_files, bytes); driver-side FS listing, one
     * RPC per cell directory — nlist RPCs, corpus-size-free. */
   def layoutStats(spark: SparkSession, path: String): DataFrame = {
-    IvfIndex.readSidecar(spark, path, "_ivfpq.json") // layout refusal first
+    requireSaved(spark, path)
     IvfIndex.dataTreeStats(spark, path)
   }
 
   /** [[IvfIndex.recoverIngestSweep]] for a saved plain-IVFADC layout —
     * the fresh-checkpoint crash-recovery runbook (quiesced only). */
   def recoverIngest(spark: SparkSession, path: String): (Seq[Long], Seq[Long]) = {
-    IvfIndex.readSidecar(spark, path, "_ivfpq.json") // layout refusal first
+    requireSaved(spark, path)
     IvfIndex.recoverIngestSweep(spark, path, path)
   }
 
@@ -719,7 +652,7 @@ object IvfPqIndex {
     * back), instead of guessing which tree is authoritative. */
   def compactSaved(spark: SparkSession, path: String,
       targetFileBytes: Long = 128L << 20): Unit = {
-    IvfIndex.readSidecar(spark, path, "_ivfpq.json") // layout refusal first
+    requireSaved(spark, path)
     IvfIndex.compactDataTree(spark, path, targetFileBytes)
   }
 }

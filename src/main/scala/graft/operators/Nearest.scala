@@ -472,7 +472,7 @@ object Nearest {
    * code-width bytes through the join): at 100 TB the corpus at rest
    * is codes, so the full-vector `knnJoinAgg` pass is the one piece of
    * [[mmrTopKMany]] that doesn't survive the scale-up. Composition is
-   * the refine-stage convention ([[IvfPqIndex.refineManyFromShortlists]]):
+   * the refine-stage convention ([[AnnIndex.searchManyRefine]]):
    * the ADC shortlist joins its RAW vectors by id — only shortlist
    * rows survive the raw side — queries broadcast back, EXACT cosine
    * re-scores, and the shared grouped greedy runs per query. Recall is

@@ -102,46 +102,6 @@ final class OpqIvfPqIndex private[operators] (
       OpqIvfPqIndex.rotated(queries, queryEmbCol, rotation, dim),
       queryIdCol, queryEmbCol, nprobe)
 
-  /** Refine through the rotation seam: the coded pass shortlists in
-    * ROTATED space (query rotated driver-side), the exact re-rank runs
-    * on the RAW vectors with the RAW query — legitimate because R is
-    * orthogonal, so exact cosine is the same number in either space;
-    * rotating the raw corpus for the re-rank would spend d² FLOPs per
-    * fetched row to compute the identical score. Same contract as
-    * [[IvfPqIndex.searchRefine]]. */
-  override def searchRefine(raw: DataFrame, idCol: String, embCol: String,
-      queryVec: Array[Float], n: Int, shortlist: Int, nprobe: Int,
-      simCol: String, tieBreakers: Seq[Column],
-      maxShortlist: Int): DataFrame = {
-    require(n >= 1 && shortlist >= n,
-      s"need shortlist ($shortlist) >= n ($n) >= 1")
-    require(shortlist <= maxShortlist,
-      s"shortlist $shortlist exceeds maxShortlist $maxShortlist — the re-rank's " +
-        "id predicate is built from a driver-collected id list; raise " +
-        "maxShortlist deliberately or shrink the shortlist")
-    val shortIds = search(queryVec, shortlist, nprobe, simCol, tieBreakers)
-      .select(col(idCol)).collect().map(_.get(0))
-    PqIndex.refineByIds(raw, idCol, embCol, queryVec, n, shortIds, simCol,
-      tieBreakers)
-  }
-
-  /** [[IvfPqIndex.searchManyRefine]] through the rotation seam: the
-    * ADC batch shortlists on in-plan-rotated queries; the exact
-    * re-rank joins RAW vectors against the RAW query column (cosine is
-    * rotation-invariant — see [[searchRefine]]). Fully distributed. */
-  override def searchManyRefine(queries: DataFrame, queryIdCol: String,
-      queryEmbCol: String, raw: DataFrame, corpusIdCol: String,
-      corpusEmbCol: String, n: Int, shortlist: Int, nprobe: Int,
-      simCol: String): DataFrame = {
-    require(n >= 1 && shortlist >= n,
-      s"need shortlist ($shortlist) >= n ($n) >= 1")
-    IvfPqIndex.refineManyFromShortlists(
-      searchMany(queries, queryIdCol, queryEmbCol, corpusIdCol,
-        k = shortlist, nprobe = nprobe, simCol = simCol),
-      queries, queryIdCol, queryEmbCol, raw, corpusIdCol, corpusEmbCol,
-      n, simCol)
-  }
-
   /** Incremental maintenance under ALL frozen artifacts (rotation,
     * quantizer, codebooks): rotate the batch in-plan, then
     * [[IvfPqIndex.addBatch]] — so
@@ -155,28 +115,34 @@ final class OpqIvfPqIndex private[operators] (
 
   /** [[addBatch]] straight into a SAVED layout (rotate, then append
     * coded rows under their `cell=` partitions of the nested inner
-    * layout). Verifies FIRST that `$path` is an OPQ∘IVFADC layout and
-    * that its PERSISTED rotation equals this index's — appending rows
-    * rotated with a different R would silently mix spaces, exactly the
-    * footgun the nested-layout [[save]] guards against at load time;
-    * the guard must hold at APPEND time too (float32 round-trips
-    * parquet exactly, so the compare is bit-for-bit, not tolerance). */
+    * layout), behind [[requireSavedRotation]]. */
   def appendToSaved(path: String, newDf: DataFrame, embCol: String): Unit = {
-    val saved = OpqIvfPqIndex.readRotation(newDf.sparkSession, path)
-    require(saved.sameElements(rotation),
-      s"$path was saved under a DIFFERENT rotation than this index holds — " +
-        "appending would mix rotated spaces and silently degrade every " +
-        "subsequent search; reopen the layout with OpqIvfPqIndex.load and " +
-        "append through THAT instance, or re-save this index first")
+    requireSavedRotation(newDf.sparkSession, path)
     inner.appendToSaved(s"$path/ivfpq",
       OpqIvfPqIndex.rotated(newDf, embCol, rotation, dim), embCol)
   }
+
+  /** The stack's write-side layout refusal, run first by
+    * [[appendToSaved]] and by ingest: `$path` must be an OPQ∘IVFADC
+    * layout ([[OpqIvfPqIndex.readRotation]]) whose PERSISTED rotation
+    * equals this index's — writing rows rotated with a different R
+    * would silently mix spaces, exactly the footgun the nested-layout
+    * [[save]] guards against at load time (float32 round-trips
+    * parquet exactly, so the compare is bit-for-bit, not tolerance). */
+  private def requireSavedRotation(spark: SparkSession, path: String): Unit =
+    require(OpqIvfPqIndex.readRotation(spark, path).sameElements(rotation),
+      s"$path was saved under a DIFFERENT rotation than this index holds — " +
+        "writing would mix rotated spaces and silently degrade every " +
+        "subsequent search; reopen the layout with OpqIvfPqIndex.load and " +
+        "write through THAT instance, or re-save this index first")
 
   /** Guarded per-batch INGEST into a saved layout — the body of the
     * streaming maintenance loop
     * ([[graft.streaming.StreamOps.annIngestPerBatch]]), factored out so
     * each contract is spec-testable without a stream. Per batch:
     *
+    * 0. [[requireSavedRotation]] — the layout refusal, before anything
+    *    else.
     * 1. REPLAY GUARD — `$path/_ingest/batch_<batchId>.json` marks a
     *    batch that already COMMITTED; if present the call completes a
     *    crashed promotion if one is pending, else no-ops. Structured
@@ -191,9 +157,8 @@ final class OpqIvfPqIndex private[operators] (
     *    REFUSE with the re-fit remedy; a refusal fails the
     *    StreamingQuery by design (refuse-don't-degrade: better a dead
     *    stream than a layout serving silently degraded recall).
-    * 3. Rotation-verified STAGE of the coded rows (the bit-for-bit
-    *    sidecar compare [[appendToSaved]] runs, then the rotated batch
-    *    encodes into the staging tree), marker, promote.
+    * 3. STAGE of the coded rows (the rotated batch encodes into the
+    *    staging tree), marker, promote.
     * 4. MAINTENANCE CADENCE — every micro-batch appends new files
     *    under each `cell=` partition, so a long-lived streaming layout
     *    accretes exactly the small files [[layoutStats]] gauges; when
@@ -222,24 +187,15 @@ final class OpqIvfPqIndex private[operators] (
       targetFileBytes: Long, crashPoint: Int): Boolean = {
     val spark = batch.sparkSession
     IvfIndex.ingestBatchSkeleton(spark, path, batch, batchId,
+      refuse = () => requireSavedRotation(spark, path),
       guard = () => (baselineSelfSim match {
         case Some(b) => codecGuard(batch, embCol, b)
         case None => codecGuard(batch, embCol)
       }).foreach(warnSink),
-      stage = p => {
-        // the same rotation-mismatch refusal appendToSaved runs (the
-        // bit-for-bit sidecar compare), then the rotated batch encodes
-        // into the STAGING tree instead of the live one
-        val saved = OpqIvfPqIndex.readRotation(spark, path)
-        require(saved.sameElements(rotation),
-          s"$path was saved under a DIFFERENT rotation than this index " +
-            "holds — staging would mix rotated spaces; reopen the layout " +
-            "with OpqIvfPqIndex.load and ingest through THAT instance")
-        inner.stageEncoded(p,
-          OpqIvfPqIndex.rotated(batch, embCol, rotation, dim), embCol)
-      },
-      // the rotation check verified $path, so the cadence gauge reads
-      // the nested tree directly
+      stage = p => inner.stageEncoded(p,
+        OpqIvfPqIndex.rotated(batch, embCol, rotation, dim), embCol),
+      // the refusal verified $path, so the cadence gauge reads the
+      // nested tree directly
       dataTreeRoot = s"$path/ivfpq",
       compact = () => OpqIvfPqIndex.compactSaved(spark, path, targetFileBytes),
       compactFilesPerCell = compactFilesPerCell, crashPoint = crashPoint)
@@ -253,55 +209,30 @@ final class OpqIvfPqIndex private[operators] (
     * cos(v, q(v)) over a deterministic hash-ordered sample (the
     * [[PqIndex.fit]] sampling convention, bounded by `maxSample`),
     * where v is the quantity the codebooks actually code — the
-    * ROTATED vector, or the rotated RESIDUAL under `byResidual` (same
-    * assignment + subtraction staging as encode, so the number
-    * measures exactly the code the batch would be stored as).
+    * ROTATED vector, or the rotated RESIDUAL under `byResidual`: the
+    * raw sample rotates, then [[IvfPqIndex.codecSelfSimilarity]]'s
+    * measurement runs unchanged.
     * Measure it once on the BUILD corpus for the baseline, then on
     * each appended batch via [[codecGuard]]: cell-size `driftGuard`
     * sees only OCCUPANCY drift, while a batch whose distribution has
     * rotated away from the frozen R keeps cells balanced and loses
     * recall silently — this is the number that moves. */
   def codecSelfSimilarity(df: DataFrame, embCol: String,
-      maxSample: Int = 65536): Double = {
-    require(maxSample >= 1, s"maxSample must be >= 1, got $maxSample")
-    require(embCol != "__resid" && embCol != "__codec_sim",
-      s"'$embCol' collides with a reserved codec staging column — rename it")
-    val rotated = OpqIvfPqIndex.rotated(
-      df.select(col(embCol)).where(col(embCol).isNotNull)
-        .orderBy(xxhash64(col(embCol))).limit(maxSample),
-      embCol, rotation, dim)
-    val perRow =
-      if (!byResidual)
-        PqIndex.selfSimilarity(rotated, embCol, model, "__codec_sim")
-      else
-        PqIndex.selfSimilarity(
-          IvfPqIndex.withResidual(
-            IvfIndex.assignWithCentroids(rotated, embCol, inner.centroidVectors),
-            embCol, inner.centroidVectors, "__resid"),
-          "__resid", model, "__codec_sim")
-    val r = perRow.agg(avg(col("__codec_sim")).as("m"),
-      count(lit(1)).as("n")).head()
-    require(r.getAs[Long]("n") > 0L,
-      s"codecSelfSimilarity found no non-NULL '$embCol' rows to measure")
-    r.getAs[Double]("m")
-  }
+      maxSample: Int = 65536): Double =
+    inner.measureCodec(df, embCol, maxSample,
+      OpqIvfPqIndex.rotated(_, embCol, rotation, dim))
 
-  /** Rotation/codebook STALENESS guard for appends — the
-    * [[ParaBloom.saturationGuard]] convention (quiet / warn / refuse
-    * with a named remedy): measures [[codecSelfSimilarity]] on the
+  /** Rotation/codebook STALENESS guard for appends — the family's
+    * [[IvfPqIndex.codecBands]]: measures [[codecSelfSimilarity]] on the
     * batch and compares to `baselineSelfSim` — by default the
     * [[codecBaseline]] the BUILD measured and the layout persists
     * (build → save → load keeps the guard armed for free; a
     * [[withArtifacts]] index or a pre-baseline layout REFUSES by name
-    * until one is passed explicitly). A drop past `refuseDrop` means the frozen
-    * rotation no longer aligns the batch's principal subspaces with
-    * the codebook split: appended codes would serve with silently
-    * degraded recall, so REFUSE and name the remedy (re-fit with
+    * until one is passed explicitly). A drop past `refuseDrop` means the
+    * frozen rotation no longer aligns the batch's principal subspaces
+    * with the codebook split: REFUSE and name the remedy (re-fit with
     * [[OpqIvfPqIndex.build]] — the same trade the residual layout
-    * documents for cell drift). Between `warnDrop` and `refuseDrop`,
-    * returns the warning for the caller's telemetry. A batch that
-    * codes BETTER than baseline is quiet — only degradation is
-    * drift. */
+    * documents for cell drift). */
   def codecGuard(batch: DataFrame, embCol: String,
       baselineSelfSim: Double = codecBaseline.getOrElse(
         throw new IllegalArgumentException(
@@ -310,27 +241,10 @@ final class OpqIvfPqIndex private[operators] (
             "pass baselineSelfSim explicitly, measured by codecSelfSimilarity " +
             "on the build corpus")),
       warnDrop: Double = 0.02, refuseDrop: Double = 0.05,
-      maxSample: Int = 65536): Option[String] = {
-    require(baselineSelfSim >= -1.0 && baselineSelfSim <= 1.0,
-      s"baselineSelfSim must be a cosine in [-1, 1], got $baselineSelfSim")
-    require(warnDrop > 0 && warnDrop <= refuseDrop,
-      s"need 0 < warnDrop <= refuseDrop, got ($warnDrop, $refuseDrop)")
-    val got = codecSelfSimilarity(batch, embCol, maxSample)
-    val drop = baselineSelfSim - got
-    if (drop > refuseDrop) throw new IllegalStateException(
-      f"OPQ codec self-similarity $got%.4f on this batch is $drop%.4f below " +
-        f"the build-time baseline $baselineSelfSim%.4f (refuse threshold " +
-        f"$refuseDrop%.3f): the batch's distribution has drifted from the " +
-        "FROZEN rotation/codebooks, so its codes would serve with silently " +
-        "degraded recall. Re-fit the stack (OpqIvfPqIndex.build) on the " +
-        "grown corpus — refusing to append under a stale rotation")
-    else if (drop > warnDrop) Some(
-      f"WARNING: OPQ codec self-similarity $got%.4f is $drop%.4f below the " +
-        f"build-time baseline $baselineSelfSim%.4f (warn threshold " +
-        f"$warnDrop%.3f) — the rotation is going stale for incoming data; " +
-        f"plan a re-fit before the refuse threshold ($refuseDrop%.3f)")
-    else None
-  }
+      maxSample: Int = 65536): Option[String] =
+    IvfPqIndex.codecBands(codecSelfSimilarity(batch, embCol, maxSample),
+      baselineSelfSim, warnDrop, refuseDrop, "OPQ", "rotation/codebooks",
+      "OpqIvfPqIndex.build")
 
   /** Persist the whole stack: `_opqivfpq.json` sidecar + the rotation
     * as a plain (row, vector) parquet frame + the inner IVFADC layout
@@ -343,10 +257,7 @@ final class OpqIvfPqIndex private[operators] (
     val spark = inner.encoded.sparkSession
     import spark.implicits._
     IvfIndex.writeSidecar(spark, path, "_opqivfpq.json",
-      codecBaseline match {
-        case Some(b) => s"""{"dim": $dim, "codec_baseline": $b}"""
-        case None => s"""{"dim": $dim}"""
-      })
+      (("dim" -> dim) +: codecBaseline.map("codec_baseline" -> _).toSeq): _*)
     (0 until dim).map(i => (i, rotation.slice(i * dim, (i + 1) * dim).toSeq))
       .toDF("row", "vector")
       .write.mode("overwrite").parquet(s"$path/rotation")
@@ -418,16 +329,10 @@ object OpqIvfPqIndex {
     * directory would otherwise fabricate a rotation. */
   private[operators] def readRotation(spark: SparkSession,
       path: String): Array[Float] = {
-    val json =
-      try IvfIndex.readSidecar(spark, path, "_opqivfpq.json")
-      catch {
-        case e: Exception => throw new IllegalArgumentException(
-          s"$path is not an OPQ∘IVFADC layout (no readable _opqivfpq.json) — " +
-            "plain IVFADC layouts reopen with IvfPqIndex.load", e)
-      }
-    val dim = """"dim"\s*:\s*(\d+)""".r.findFirstMatchIn(json)
-      .map(_.group(1).toInt)
-      .getOrElse(throw new IllegalArgumentException(
+    val json = IvfIndex.requireLayout(spark, path, "_opqivfpq.json",
+      "an OPQ∘IVFADC layout", "plain IVFADC layouts reopen with IvfPqIndex.load")
+    val dim = IvfIndex.sidecarField(json, "dim").map(_.toInt).getOrElse(
+      throw new IllegalArgumentException(
         s"$path/_opqivfpq.json carries no dim field: $json"))
     // by-name reads (the r12 ADVICE convention): a rewritten rotation
     // file with reordered columns must fail by name, not misread
@@ -562,8 +467,7 @@ object OpqIvfPqIndex {
   def load(spark: SparkSession, path: String): OpqIvfPqIndex = {
     val rot = readRotation(spark, path)
     val json = IvfIndex.readSidecar(spark, path, "_opqivfpq.json")
-    val baseline = """"codec_baseline"\s*:\s*([-+0-9.eE]+)""".r
-      .findFirstMatchIn(json).map(_.group(1).toDouble)
+    val baseline = IvfIndex.sidecarField(json, "codec_baseline").map(_.toDouble)
     new OpqIvfPqIndex(rot, IvfPqIndex.load(spark, s"$path/ivfpq"), baseline)
   }
 }

@@ -343,10 +343,9 @@ object StreamOps {
       val spark = batch.sparkSession
       if (repairMaxRows.isDefined) {
         // re-sync after a restart that lost an earlier repair's handle
-        val savedNlist = """"nlist"\s*:\s*(\d+)""".r
-          .findFirstMatchIn(
-            graft.operators.IvfIndex.readSidecar(spark, path, "_ivf.json"))
-          .map(_.group(1).toInt)
+        val savedNlist = graft.operators.IvfIndex.sidecarField(
+          graft.operators.IvfIndex.readSidecar(spark, path, "_ivf.json"),
+          "nlist").map(_.toInt)
         if (savedNlist.exists(_ != cur.centroidVectors.length))
           cur = graft.operators.IvfIndex.load(spark, path)
       }

@@ -127,8 +127,11 @@ class PlanShapeSpec extends AnyFunSuite {
     // Four chained operators must still make one sane plan: the
     // decontamination stage's eval-gram side broadcasts (corpus never
     // bulk-shuffles for the anti-join) and no stage degenerates into
-    // a cartesian product.
-    val p = plan("pipeline_pretrain")
+    // a cartesian product. The query's stage seams root its plan at
+    // LogicalRDD, so the guard reads the same chain un-cut.
+    val (_, _, _, shipped) = SparkEntry.pretrainChain(spark, sf, cut = false)
+    val p = shipped().orderBy(col("doc_id")).queryExecution
+      .explainString(org.apache.spark.sql.execution.SimpleMode)
     assert(!p.contains("CartesianProduct"), s"composition produced a cartesian:\n$p")
     assert(p.contains("LeftAnti"), "decontamination left-anti join missing from the chain")
     assert(p.contains("BroadcastExchange"), "eval-gram side no longer broadcasts")
