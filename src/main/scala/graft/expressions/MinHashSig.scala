@@ -3,11 +3,9 @@ package graft.expressions
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
-
-import scala.util.hashing.MurmurHash3
 
 /**
  * MinHash signature over word-shingle sets: `numHashes` independent
@@ -23,7 +21,8 @@ import scala.util.hashing.MurmurHash3
  * explosion dominate at corpus scale.
  *
  * Hash family: one 64-bit base hash per DISTINCT shingle (two fixed-seed
- * MurmurHash3 words), then h_i(x) = splitmix64(x ^ c_i) with per-slot
+ * MurmurHash3 words, hashed in place by [[ShingleHashes]]' gram loop
+ * without building the shingle string), then h_i(x) = splitmix64(x ^ c_i) with per-slot
  * constants c_i = splitmix64(seed + i) — deterministic across runs,
  * partitionings, and JVMs. Texts with fewer than `shingleSize` tokens
  * yield an EMPTY array (no shingles → no signature; callers filter).
@@ -75,34 +74,27 @@ object MinHashSig {
       { case (s, h) => Array.tabulate(h)(j => mix64(s.toLong + j)) })
 
   /** The kernel, callable from generated Java (static forwarder).
-    * Tokenization and base hash are shared with [[ShingleHashes]] —
-    * the minhash verify stage depends on the two staying bit-identical. */
+    * Tokenization and base hash are [[ShingleHashes]]' own gram loop
+    * ([[ShingleHashes.Tokens]]) — the minhash verify stage depends on
+    * the two staying bit-identical. */
   def signature(u: UTF8String, numHashes: Int, shingleSize: Int, seed: Int): ArrayData = {
-    val toks = ShingleHashes.tokenize(u)
-    val n = toks.length - shingleSize + 1
-    if (n <= 0) return new GenericArrayData(Array.empty[Long])
     // distinct shingle base hashes (MinHash is a SET estimator)
-    val baseHashes = new java.util.HashSet[java.lang.Long](math.max(8, n * 2))
-    var i = 0
-    while (i < n) {
-      val shingle =
-        if (shingleSize == 1) toks(i)
-        else toks.slice(i, i + shingleSize).mkString(" ")
-      baseHashes.add(ShingleHashes.baseHash(shingle, seed))
-      i += 1
-    }
+    val hs = new ShingleHashes.Tokens(u).gramHashes(shingleSize, seed)
+    val n = ShingleHashes.sortDistinct(hs)
+    if (n == 0) return ShingleHashes.longArray(hs, 0)
     val cs = consts(seed, numHashes)
     val sig = Array.fill[Long](numHashes)(Long.MaxValue)
-    val it = baseHashes.iterator()
-    while (it.hasNext) {
-      val h = it.next().longValue()
+    var i = 0
+    while (i < n) {
+      val h = hs(i)
       var j = 0
       while (j < numHashes) {
         val v = mix64(h ^ cs(j))
         if (v < sig(j)) sig(j) = v
         j += 1
       }
+      i += 1
     }
-    new GenericArrayData(sig)
+    ShingleHashes.longArray(sig, numHashes)
   }
 }

@@ -18,13 +18,16 @@ import org.apache.spark.unsafe.types.UTF8String
  * The map-only shape is the point: the equivalent relational
  * formulation (explode bigrams → groupBy(doc, gram) → groupBy(doc))
  * shuffles every n-gram occurrence twice — at corpus scale that is the
- * dominant cost of the quality pass, while this expression keeps a
- * per-doc counter map and shuffles nothing. (It also avoids the
+ * dominant cost of the quality pass, while this expression counts per
+ * doc and shuffles nothing. (It also avoids the
  * `transform(sequence(...))` HOF pipeline, which executes as
  * CodegenFallback — see [[ShingleHashes]].)
  *
  * Counting is on the shared 64-bit [[ShingleHashes.baseHash]] of each
- * word/bigram (collisions ~n²/2⁶⁴ — immaterial for counters);
+ * word/bigram (collisions ~n²/2⁶⁴ — immaterial for counters), taken
+ * from the family's one gram loop ([[ShingleHashes.Tokens]]) and
+ * counted by sorting the hashes and measuring runs — no strings, no
+ * boxed counter map;
  * tokenization is the family's shared lowercase-\s+ split, identical
  * to the `string_split_regex(lower(text), '\s+')` the DuckDB oracle
  * uses, so the counter VALUES are engine-portable even though the
@@ -61,28 +64,24 @@ case class RepetitionStats(child: Expression, seed: Int = 42)
 object RepetitionStats {
   /** The kernel, callable from generated Java (static forwarder). */
   def stats(u: UTF8String, seed: Int): InternalRow = {
-    val toks = ShingleHashes.tokenize(u)
-    val n = toks.length
-    val words = new java.util.HashSet[java.lang.Long](math.max(8, n * 2))
-    val bigrams = new java.util.HashMap[java.lang.Long, Int](math.max(8, n * 2))
-    var i = 0
-    while (i < n) {
-      words.add(ShingleHashes.baseHash(toks(i), seed))
-      if (i + 1 < n) {
-        val h = ShingleHashes.baseHash(toks(i) + " " + toks(i + 1), seed)
-        bigrams.merge(h, 1, (a, b) => a + b)
-      }
-      i += 1
-    }
+    val toks = new ShingleHashes.Tokens(u)
+    val n = toks.count
+    val distinct = ShingleHashes.sortDistinct(toks.gramHashes(1, seed))
+    // bigram counts are the run lengths of the sorted bigram hashes
+    val bigrams = toks.gramHashes(2, seed)
+    java.util.Arrays.sort(bigrams)
     var topCnt = 0L
     var dupOcc = 0L
-    val it = bigrams.values().iterator()
-    while (it.hasNext) {
-      val c = it.next().toLong
+    var i = 0
+    while (i < bigrams.length) {
+      var j = i + 1
+      while (j < bigrams.length && bigrams(j) == bigrams(i)) j += 1
+      val c = (j - i).toLong
       if (c > topCnt) topCnt = c
       if (c > 1) dupOcc += c
+      i = j
     }
     new GenericInternalRow(Array[Any](
-      n.toLong, words.size.toLong, math.max(0, n - 1).toLong, topCnt, dupOcc))
+      n.toLong, distinct.toLong, math.max(0, n - 1).toLong, topCnt, dupOcc))
   }
 }

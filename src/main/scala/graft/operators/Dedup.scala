@@ -714,6 +714,11 @@ object Dedup {
    * precision is exact; recall is the banding probability (≈0.87 at
    * J = t = 0.5 with 128/32, →1 above it). Seed pinned.
    *
+   * Plan: the bucket join is a shuffled hash join (the corpus × bands
+   * banded rows never broadcast); its distinct candidate pairs are
+   * evaluated once, joined to both sides' `(id, text)` rows, and only
+   * those candidate rows are shingled for the verify.
+   *
    * Native replacement for the former spark.ml `HashingTF → MinHashLSH
    * → approxSimilarityJoin` chain: no ml-Vector UDT serialization, no
    * r=1 hash-table candidate explosion (ml ORs single-hash tables, so
@@ -863,11 +868,8 @@ object Dedup {
     require(newIdx.params == baseIdx.params,
       s"minhash indexes built with different parameters cannot be joined: " +
         s"${newIdx.params} vs ${baseIdx.params}")
-    val cands = newIdx.banded.as("a").join(baseIdx.banded.as("b"),
-        col("a.__band") === col("b.__band") && col("a.__key") === col("b.__key"))
-      .select(col(s"a.$idCol").as("id1"), col(s"b.$idCol").as("id2"))
-      .distinct()
-    verifyJaccard(cands, newIdx.shingles, baseIdx.shingles, idCol, threshold)
+    verifyJaccard(candidates(newIdx, baseIdx, idCol, lit(true)), newIdx, baseIdx,
+        idCol, threshold)
       .withColumnRenamed("id1", "id_new").withColumnRenamed("id2", "id_base")
   }
 
@@ -925,13 +927,10 @@ object Dedup {
       textCol: String, idCol: String, n: Int = 13): DataFrame = {
     require(n >= 1, s"n-gram size must be >= 1, got $n")
     require(idCol != "__g", "decontaminate reserves '__g' for the gram hash column")
-    def gramHashes(c: Column): Column =
-      ColumnBridge.column(graft.expressions.ShingleHashes(
-        ColumnBridge.expression(c), n))
     val evalGrams = evalDf
-      .select(explode(gramHashes(col(textCol))).as("__g")).distinct()
+      .select(explode(shingleHashes(col(textCol), n)).as("__g")).distinct()
     val contaminated = corpus
-      .select(col(idCol), explode(gramHashes(col(textCol))).as("__g"))
+      .select(col(idCol), explode(shingleHashes(col(textCol), n)).as("__g"))
       .join(broadcast(evalGrams), "__g")
       .select(idCol).distinct()
     corpus.join(contaminated, Seq(idCol), "left_anti")
@@ -965,13 +964,10 @@ object Dedup {
       s"corpus id and eval id columns must have distinct names, both were '$idCol'")
     require(idCol != "__g" && evalIdCol != "__g",
       "decontaminateReport reserves '__g' for the gram hash column")
-    def gramHashes(c: Column): Column =
-      ColumnBridge.column(graft.expressions.ShingleHashes(
-        ColumnBridge.expression(c), n))
     val evalGrams = evalDf
-      .select(col(evalIdCol), explode(gramHashes(col(textCol))).as("__g")).distinct()
+      .select(col(evalIdCol), explode(shingleHashes(col(textCol), n)).as("__g")).distinct()
     corpus
-      .select(col(idCol), explode(array_distinct(gramHashes(col(textCol)))).as("__g"))
+      .select(col(idCol), explode(array_distinct(shingleHashes(col(textCol), n))).as("__g"))
       .join(broadcast(evalGrams), "__g")
       .groupBy(col(idCol), col(evalIdCol))
       .agg(count(lit(1)).as("n_shared_grams"))
@@ -980,9 +976,12 @@ object Dedup {
   /** Precomputed minhash artifacts for one corpus: banded signature
     * buckets + shingle sets, both pure functions of the text — the
     * history side of incremental dedup persists these instead of
-    * re-hashing the corpus every batch. */
+    * re-hashing the corpus every batch. `texts` holds the corpus'
+    * `(id, __text)` rows: the pair verify joins candidates to them and
+    * hashes shingles for candidate rows only. */
   case class MinhashIndex private[operators] (
-      banded: DataFrame, shingles: DataFrame, params: (Int, Int, Int, Int))
+      banded: DataFrame, shingles: DataFrame, params: (Int, Int, Int, Int))(
+      private[operators] val texts: DataFrame)
 
   /** Build a [[MinhashIndex]] (see [[minhashPairsAcross]]). */
   def minhashIndex(df: DataFrame, textCol: String, idCol: String,
@@ -991,14 +990,25 @@ object Dedup {
     minhashStage(df, textCol, idCol, shingleSize, numHashes, bands, seed)
 
   /** Self-join candidates + verify over one index (id1 < id2). */
-  private def selfPairs(st: MinhashIndex, idCol: String, threshold: Double): DataFrame = {
-    val cands = st.banded.as("a").join(st.banded.as("b"),
-        col("a.__band") === col("b.__band") && col("a.__key") === col("b.__key") &&
-          col(s"a.$idCol") < col(s"b.$idCol"))
+  private def selfPairs(st: MinhashIndex, idCol: String, threshold: Double): DataFrame =
+    verifyJaccard(candidates(st, st, idCol, col(s"a.$idCol") < col(s"b.$idCol")),
+      st, st, idCol, threshold)
+
+  /** Distinct `(id1, id2)` pairs of `a` and `b` rows sharing a band
+    * bucket (and meeting `cond`): a SHUFFLED hash join on
+    * `(__band, __key)`. The banded frame holds corpus × bands rows, so
+    * it must never broadcast, which would collect all of them to the
+    * driver; left to itself the planner broadcasts it whenever its size
+    * estimate is under the broadcast threshold (12k docs × 32 bands
+    * made a 48 MiB hashed relation). The hint pins the shuffle and,
+    * unlike a sort-merge join, sorts neither side. In a self-join both
+    * sides read one exchange. */
+  private def candidates(a: MinhashIndex, b: MinhashIndex, idCol: String,
+      cond: Column): DataFrame =
+    a.banded.as("a").hint("shuffle_hash").join(b.banded.as("b"),
+        col("a.__band") === col("b.__band") && col("a.__key") === col("b.__key") && cond)
       .select(col(s"a.$idCol").as("id1"), col(s"b.$idCol").as("id2"))
       .distinct()
-    verifyJaccard(cands, st.shingles, st.shingles, idCol, threshold)
-  }
 
   /** Shared signature/banding/shingle stage of the minhash family. */
   private def minhashStage(df: DataFrame, textCol: String, idCol: String,
@@ -1006,29 +1016,16 @@ object Dedup {
     require(bands > 0 && numHashes % bands == 0,
       s"bands ($bands) must divide numHashes ($numHashes)")
     val r = numHashes / bands
-    val sigCol = org.apache.spark.sql.graftbridge.ColumnBridge.column(
-      graft.expressions.MinHashSig(
-        org.apache.spark.sql.graftbridge.ColumnBridge.expression(col(textCol)),
-        numHashes, shingleSize, seed))
-    // distinct word-shingle sets for the verify, as sorted 64-bit
-    // hashes from the same codegen'd kernel family as the signature —
-    // NOT a transform/concat_ws HOF pipeline, which executes as
-    // CodegenFallback at ~50µs per shingle (see ShingleHashes docs)
-    val shCol = org.apache.spark.sql.graftbridge.ColumnBridge.column(
-      graft.expressions.ShingleHashes(
-        org.apache.spark.sql.graftbridge.ColumnBridge.expression(col(textCol)),
-        shingleSize, seed))
+    val sigCol = ColumnBridge.column(graft.expressions.MinHashSig(
+      ColumnBridge.expression(col(textCol)), numHashes, shingleSize, seed))
     // materialize (id, signature) ONCE — the frame can feed both sides
     // of a self-join, and without pinning it the signature kernel
     // re-evaluates per branch. Lazy localCheckpoint: construction runs
     // no job; content is a deterministic pure function of the input.
-    // The shingle arrays stay OUT of the checkpoint: variable-width
-    // rows cost far more through the RDD boundary than the fixed-width
-    // signatures, while recomputing them is one narrow codegen pass.
     val sigd = df.select(col(idCol), sigCol.as("__sig"))
       .where(size(col("__sig")) > 0)
       .localCheckpoint(false)
-    val sh = df.select(col(idCol), shCol.as("__sh"))
+    val texts = df.select(col(idCol), col(textCol).as("__text"))
     // explode the band INDEX first, then hash the slice in an ordinary
     // projection — keeping xxhash64(slice(...)) out of a transform()
     // lambda keeps it in whole-stage codegen (HOF lambdas are
@@ -1038,29 +1035,44 @@ object Dedup {
       .select(col(idCol), col("__band"),
         xxhash64(slice(col("__sig"), col("__band") * lit(r) + lit(1), lit(r)))
           .as("__key"))
-    MinhashIndex(banded, sh, (shingleSize, numHashes, bands, seed))
+    MinhashIndex(banded,
+      texts.select(col(idCol), shingleHashes(col("__text"), shingleSize, seed).as("__sh")),
+      (shingleSize, numHashes, bands, seed))(texts)
   }
 
-  /** Exact-Jaccard verification of candidate pairs against the two
-    * sides' shingle frames — integer cross-multiplied threshold (no fp
-    * division at the boundary); |A∪B| = |A|+|B|−I. Semi-join prunes
-    * FIRST: only candidate ids get their shingle set computed and
-    * shuffled, so the verify cost is bounded by the candidate count
-    * (which tracks true pairs), not the corpus. */
-  private def verifyJaccard(cands: DataFrame, shLeft: DataFrame, shRight: DataFrame,
+  /** Distinct word-shingle set as sorted 64-bit hashes, from the same
+    * codegen'd kernel family as the signature — NOT a
+    * transform/concat_ws HOF pipeline, which executes as
+    * CodegenFallback at ~50µs per shingle (see ShingleHashes docs). */
+  private def shingleHashes(text: Column, shingleSize: Int, seed: Int = 42): Column =
+    ColumnBridge.column(graft.expressions.ShingleHashes(
+      ColumnBridge.expression(text), shingleSize, seed))
+
+  /** Exact-Jaccard verification of candidate pairs — integer
+    * cross-multiplied threshold (no fp division at the boundary);
+    * |A∪B| = |A|+|B|−I. The candidates are joined to the `(id, text)`
+    * rows of each side and shingle sets are hashed ABOVE those joins,
+    * so only candidate rows are ever shingled and the candidate frame
+    * is evaluated once: the verify cost tracks the candidate count
+    * (which tracks true pairs), not the corpus. A document in several
+    * pairs is shingled once per pair. */
+  private def verifyJaccard(cands: DataFrame, left: MinhashIndex, right: MinhashIndex,
       idCol: String, threshold: Double): DataFrame = {
     require(threshold > 0 && threshold <= 1,
       s"threshold must be in (0, 1], got $threshold")
     val (p, q) = thresholdRational(threshold)
-    val s1 = shLeft.join(cands.select(col("id1").as(idCol)).distinct(),
-        Seq(idCol), "left_semi")
-      .select(col(idCol).as("id1"), col("__sh").as("__sh1"))
-    val s2 = shRight.join(cands.select(col("id2").as(idCol)).distinct(),
-        Seq(idCol), "left_semi")
-      .select(col(idCol).as("id2"), col("__sh").as("__sh2"))
+    val (shingleSize, _, _, seed) = left.params
     val inter = size(array_intersect(col("__sh1"), col("__sh2"))).cast("long")
     val unionSz = (size(col("__sh1")) + size(col("__sh2"))).cast("long") - inter
-    cands.join(s1, Seq("id1")).join(s2, Seq("id2"))
+    cands
+      .join(left.texts.select(col(idCol).as("id1"), col("__text").as("__t1")), "id1")
+      .join(right.texts.select(col(idCol).as("id2"), col("__text").as("__t2")), "id2")
+      // the one-row generator is a barrier the Jaccard filter is not
+      // pushed through: pushed into the join condition, it would run
+      // the kernel once per reference to a shingle set
+      .select(col("id1"), col("id2"), inline(array(struct(
+        shingleHashes(col("__t1"), shingleSize, seed).as("__sh1"),
+        shingleHashes(col("__t2"), shingleSize, seed).as("__sh2")))))
       .withColumn("__i", inter).withColumn("__u", unionSz)
       .where(col("__u") > 0 && col("__i") * lit(q) >= col("__u") * lit(p))
       .select(col("id1"), col("id2"),

@@ -547,4 +547,66 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(p.contains("nearest_cell"),
       s"assignment must be the codegen NearestCell expression:\n$p")
   }
+
+  /** The minhash plans as EXECUTED (after adaptive re-planning), with
+    * exact copies planted so every stage has rows to plan around. */
+  private object MinhashPlans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
+    import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
+
+    private lazy val docs = {
+      val d = Tables(spark, sf, "documents").select(col("doc_id"), col("text"))
+      d.union(d.where(col("doc_id") % 5 === 0).select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
+    }
+    def selfPlan: SparkPlan = executed(graft.operators.Dedup.minhashPairs(docs, "text", "doc_id", 0.5))
+    def acrossPlan: SparkPlan = executed(graft.operators.Dedup.minhashPairsAcross(
+      docs.where(col("doc_id") >= 1000000L), docs.where(col("doc_id") < 1000000L),
+      "text", "doc_id", 0.5))
+    private def executed(df: DataFrame): SparkPlan = {
+      assert(df.collect().nonEmpty, "the planted copies must pair")
+      df.queryExecution.executedPlan
+    }
+
+    private def banded(p: SparkPlan): Boolean = p match {
+      case g: GenerateExec => g.generatorOutput.exists(_.name == "__band")
+      case _ => false
+    }
+    def candidateJoins(p: SparkPlan): Seq[BaseJoinExec] = collect(p) {
+      case j: BaseJoinExec if j.leftKeys.exists(_.references.exists(_.name == "__band")) => j
+    }
+    def broadcastsOfBandedRows(p: SparkPlan): Seq[SparkPlan] =
+      collect(p) { case b: BroadcastExchangeExec => b }.filter(b => find(b)(banded).isDefined)
+    def shingling(p: SparkPlan): Seq[SparkPlan] = collect(p) {
+      case n if n.expressions.exists(_.exists(_.isInstanceOf[graft.expressions.ShingleHashes])) => n
+    }
+    def broadcastJoin(j: BaseJoinExec): Boolean = j.isInstanceOf[BroadcastHashJoinExec]
+  }
+
+  test("minhash candidates are one shuffled bucket join — the banded rows never broadcast") {
+    // the banded frame is corpus × bands rows: a broadcast collects all
+    // of them to the driver, and a candidate frame consumed by several
+    // verify branches re-runs that join per branch
+    import MinhashPlans._
+    for ((name, p) <- Seq("minhashPairs" -> selfPlan, "minhashPairsAcross" -> acrossPlan)) {
+      assert(broadcastsOfBandedRows(p).isEmpty, s"$name broadcasts banded rows:\n$p")
+      val joins = candidateJoins(p)
+      assert(joins.size == 1, s"$name must evaluate its candidate join once:\n$p")
+      assert(!broadcastJoin(joins.head), s"$name candidate join must shuffle:\n$p")
+    }
+  }
+
+  test("minhash verify shingles candidate rows only — shingle_hashes sits above the candidate join") {
+    // shingling the whole corpus to verify a handful of pairs is the
+    // waste this guards against: every node that evaluates the kernel
+    // must have the candidate join beneath it
+    import MinhashPlans._
+    for ((name, p) <- Seq("minhashPairs" -> selfPlan, "minhashPairsAcross" -> acrossPlan)) {
+      val nodes = shingling(p)
+      assert(nodes.nonEmpty, s"$name verify lost shingle_hashes:\n$p")
+      for (n <- nodes)
+        assert(candidateJoins(n).nonEmpty,
+          s"$name evaluates shingle_hashes below the candidate join (over the corpus):\n$p")
+    }
+  }
 }
