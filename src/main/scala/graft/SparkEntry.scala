@@ -361,17 +361,75 @@ object SparkEntry {
       keepName: String, graceMs: Long = 3600000L): Unit = {
     val cutoff = System.currentTimeMillis() - graceMs
     Option(tmpDir.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith(base + "_") &&
-        f.getName != keepName &&
-        f.getName.stripPrefix(base + "_").matches("\\d+_\\d+") &&
-        f.lastModified() < cutoff)
-      .foreach { dir =>
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-          f.delete(): Unit
+      .filter(f => f.isDirectory && f.lastModified() < cutoff && (
+        (f.getName.startsWith(base + "_") && f.getName != keepName &&
+          f.getName.stripPrefix(base + "_").matches("\\d+_\\d+")) ||
+        // a crashed builder's private staging copy (see cachedLayout)
+        f.getName.startsWith(base + "_") && f.getName.contains("_staging_")))
+      .foreach(rmTree)
+  }
+
+  private def rmTree(f: java.io.File): Unit = {
+    Option(f.listFiles()).getOrElse(Array.empty).foreach(rmTree)
+    f.delete(): Unit
+  }
+
+  /** The marker [[cachedLayout]] writes last into a built layout. */
+  private[graft] val LayoutComplete = "_layout_complete"
+
+  /** A layout cached under `tmpDir/<base>_<fingerprint>`, built at most
+    * once per fingerprint even when several processes ask at once. A
+    * hit is a directory holding the [[LayoutComplete]] marker. On a
+    * miss, `build` writes into a PRIVATE staging directory, the marker
+    * goes in last, and the directory is published with one atomic
+    * rename — so no reader ever sees a half-written layout, and two
+    * builders never write into one directory. The loser of a rename
+    * race deletes its staging copy and serves the winner's layout. A
+    * directory without the marker at the target (left by a builder
+    * that predates the marker) is moved aside and replaced. Older
+    * fingerprints of the same base are reaped
+    * ([[reapStaleIvfCaches]]). Returns the layout path. */
+  private[graft] def cachedLayout(base: String, fingerprint: String,
+      tmpDir: java.io.File = new java.io.File("/tmp"))(build: String => Unit): String = {
+    import java.nio.file.{Files, StandardCopyOption}
+    val name = s"${base}_$fingerprint"
+    val target = new java.io.File(tmpDir, name)
+    def complete: Boolean = new java.io.File(target, LayoutComplete).exists()
+    reapStaleIvfCaches(tmpDir, base, name)
+    if (!complete) {
+      val staging = Files.createTempDirectory(tmpDir.toPath, s"${name}_staging_").toFile
+      try {
+        build(staging.getPath)
+        Files.createFile(new java.io.File(staging, LayoutComplete).toPath)
+        if (target.exists() && !complete) {
+          // atomic move aside: a concurrent builder may do the same
+          val aside = new java.io.File(tmpDir,
+            s"${name}_staging_stale_${java.util.UUID.randomUUID()}")
+          try Files.move(target.toPath, aside.toPath, StandardCopyOption.ATOMIC_MOVE)
+          catch { case _: java.io.IOException => () }
+          rmTree(aside)
         }
-        rm(dir)
-      }
+        try Files.move(staging.toPath, target.toPath, StandardCopyOption.ATOMIC_MOVE)
+        catch { case e: java.io.IOException => if (!complete) throw e }
+      } finally rmTree(staging) // a no-op once published
+    }
+    target.getPath
+  }
+
+  /** [[cachedLayout]] for a layout built from the fixture directory `d`:
+    * keyed by `prefix` + the sanitized directory path, fingerprinted by
+    * `embeddings.parquet`'s (mtime, size), so a REGENERATED fixture at
+    * the same path gets a fresh layout. A missing or renamed file would
+    * fingerprint as the constant 0_0 and defeat that check, so it
+    * refuses by name (`what` names the caller). */
+  private def fixtureLayout(prefix: String, d: String, what: String)(
+      build: String => Unit): String = {
+    val src = new java.io.File(s"$d/embeddings.parquet")
+    require(src.isFile,
+      s"$what fingerprints $src (driver fixtures are single parquet files); " +
+        "for other layouts save and load the index directly")
+    cachedLayout(s"${prefix}_${d.replaceAll("[^A-Za-z0-9]", "_")}",
+      s"${src.lastModified}_${src.length}")(build)
   }
 
   /** Build (once per fixture fingerprint, cached under /tmp) the
@@ -388,21 +446,7 @@ object SparkEntry {
     require(base.model.lossless,
       "the streamed-ingest layout requires the lossless codebook " +
         "degenerate — corpus outgrew maxTrain")
-    val src = new java.io.File(s"$d/embeddings.parquet")
-    require(src.isFile,
-      s"the streamed-ingest layout fingerprints $src (driver fixtures " +
-        "are single parquet files)")
-    val fp = s"${src.lastModified}_${src.length}"
-    val base2 = s"graft_ivfpq_ingest_${d.replaceAll("[^A-Za-z0-9]", "_")}"
-    val path = s"/tmp/${base2}_$fp"
-    reapStaleIvfCaches(new java.io.File("/tmp"), base2, s"${base2}_$fp")
-    val marker = new java.io.File(s"$path/_ingest_complete")
-    if (!marker.exists()) {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-        f.delete(): Unit
-      }
-      rm(new java.io.File(path))
+    fixtureLayout("graft_ivfpq_ingest", d, "the streamed-ingest layout") { path =>
       val half = IvfPqIndex.withArtifacts(
         e.where(col("vec_id") % 2 === 0), "embedding",
         base.centroidVectors, base.model)
@@ -412,9 +456,7 @@ object SparkEntry {
       val q = StreamOps.ivfPqIngestPerBatch(stream, half, path, "embedding",
         baselineSelfSim = 1.0, compactFilesPerCell = 1)
       try q.processAllAvailable() finally q.stop()
-      marker.createNewFile(): Unit
     }
-    path
   }
 
   /** Pre-build the memoized indexes the selected bench queries use —
@@ -2098,26 +2140,12 @@ object SparkEntry {
       require(model.lossless,
         "pipeline_rag_serve_persisted requires the lossless codebook " +
           "degenerate — corpus outgrew maxTrain")
-      val src = new java.io.File(s"$d/embeddings.parquet")
-      require(src.isFile,
-        s"pipeline_rag_serve_persisted fingerprints $src (driver fixtures " +
-          "are single parquet files)")
-      val fp = s"${src.lastModified}_${src.length}"
-      val base = s"graft_opqivfpq_rag_${d.replaceAll("[^A-Za-z0-9]", "_")}"
-      val path = s"/tmp/${base}_$fp"
-      reapStaleIvfCaches(new java.io.File("/tmp"), base, s"${base}_$fp")
-      val marker = new java.io.File(s"$path/_save_complete")
-      if (!marker.exists()) {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-          f.delete(): Unit
-        }
-        rm(new java.io.File(path))
+      val path = fixtureLayout("graft_opqivfpq_rag", d,
+          "pipeline_rag_serve_persisted") { path =>
         OpqIvfPqIndex.withArtifacts(e, "embedding",
             OpqIndex.identityRotation(dim), Array(Array.fill(dim)(0f)),
             model, byResidual = true)
           .save(path)
-        marker.createNewFile(): Unit
       }
       val idx = graft.operators.AnnIndex.open(s, path)
       val q = e.filter(col("vec_id") < 10)
@@ -4108,15 +4136,8 @@ object SparkEntry {
       // A missing/renamed layout would fingerprint as the constant 0_0
       // (File returns 0 for both) and defeat the staleness check —
       // refuse it loudly instead of caching blind.
-      val src = new java.io.File(s"$d/embeddings.parquet")
-      require(src.isFile,
-        s"ann_ivf_persisted fingerprints $src (driver fixtures are single " +
-          "parquet files); for other layouts use IvfIndex.save/load directly")
-      val fp = s"${src.lastModified}_${src.length}"
-      val base = s"graft_ivf_persist_${d.replaceAll("[^A-Za-z0-9]", "_")}"
-      val path = s"/tmp/${base}_$fp"
-      reapStaleIvfCaches(new java.io.File("/tmp"), base, s"${base}_$fp")
-      if (!new java.io.File(s"$path/_ivf.json").exists()) ivfFor(s, d).save(path)
+      val path = fixtureLayout("graft_ivf_persist", d, "ann_ivf_persisted")(path =>
+        ivfFor(s, d).save(path))
       val idx = IvfIndex.load(s, path)
       idx.search(q, k = 5, nprobe = idx.centroidVectors.length,
           tieBreakers = Seq(asc("vec_id")))
@@ -4135,15 +4156,8 @@ object SparkEntry {
       val e = Tables(s, d, "embeddings")
       val q = e.filter(col("vec_id") === 0).select("embedding")
         .head().getSeq[Float](0).toArray
-      val src = new java.io.File(s"$d/embeddings.parquet")
-      require(src.isFile,
-        s"ann_ivfpq_persisted fingerprints $src (driver fixtures are single " +
-          "parquet files); for other layouts use IvfPqIndex.save/load directly")
-      val fp = s"${src.lastModified}_${src.length}"
-      val base = s"graft_ivfpq_persist_${d.replaceAll("[^A-Za-z0-9]", "_")}"
-      val path = s"/tmp/${base}_$fp"
-      reapStaleIvfCaches(new java.io.File("/tmp"), base, s"${base}_$fp")
-      if (!new java.io.File(s"$path/_ivfpq.json").exists()) ivfPqFor(s, d).save(path)
+      val path = fixtureLayout("graft_ivfpq_persist", d, "ann_ivfpq_persisted")(path =>
+        ivfPqFor(s, d).save(path))
       val idx = IvfPqIndex.load(s, path)
       require(idx.model.lossless,
         "ann_ivfpq_persisted requires the lossless codebook degenerate — corpus outgrew maxTrain")
@@ -4167,18 +4181,10 @@ object SparkEntry {
       require(model.lossless,
         "ann_opq_ivfpq_persisted requires the lossless codebook degenerate — " +
           "corpus outgrew maxTrain")
-      val src = new java.io.File(s"$d/embeddings.parquet")
-      require(src.isFile,
-        s"ann_opq_ivfpq_persisted fingerprints $src (driver fixtures are single " +
-          "parquet files); for other layouts use OpqIvfPqIndex.save/load directly")
-      val fp = s"${src.lastModified}_${src.length}"
-      val base = s"graft_opqivfpq_persist_${d.replaceAll("[^A-Za-z0-9]", "_")}"
-      val path = s"/tmp/${base}_$fp"
-      reapStaleIvfCaches(new java.io.File("/tmp"), base, s"${base}_$fp")
-      if (!new java.io.File(s"$path/_opqivfpq.json").exists())
+      val path = fixtureLayout("graft_opqivfpq_persist", d, "ann_opq_ivfpq_persisted")(path =>
         OpqIvfPqIndex.withArtifacts(e, "embedding",
           OpqIndex.identityRotation(dim), Array(Array.fill(dim)(0f)), model,
-          byResidual = true).save(path)
+          byResidual = true).save(path))
       val idx = OpqIvfPqIndex.load(s, path)
       require(idx.model.lossless,
         "ann_opq_ivfpq_persisted requires the lossless codebook degenerate")
@@ -4206,22 +4212,8 @@ object SparkEntry {
       require(model.lossless,
         "ann_opq_ivfpq_append_persisted requires the lossless codebook " +
           "degenerate — corpus outgrew maxTrain")
-      val src = new java.io.File(s"$d/embeddings.parquet")
-      require(src.isFile,
-        s"ann_opq_ivfpq_append_persisted fingerprints $src (driver fixtures " +
-          "are single parquet files); for other layouts use " +
-          "OpqIvfPqIndex.save/appendToSaved directly")
-      val fp = s"${src.lastModified}_${src.length}"
-      val base = s"graft_opqivfpq_append_${d.replaceAll("[^A-Za-z0-9]", "_")}"
-      val path = s"/tmp/${base}_$fp"
-      reapStaleIvfCaches(new java.io.File("/tmp"), base, s"${base}_$fp")
-      val marker = new java.io.File(s"$path/_append_complete")
-      if (!marker.exists()) {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-          f.delete(): Unit
-        }
-        rm(new java.io.File(path))
+      val path = fixtureLayout("graft_opqivfpq_append", d,
+          "ann_opq_ivfpq_append_persisted") { path =>
         val half = OpqIvfPqIndex.withArtifacts(
           e.where(col("vec_id") % 2 === 0), "embedding",
           OpqIndex.identityRotation(dim), Array(Array.fill(dim)(0f)), model,
@@ -4233,7 +4225,6 @@ object SparkEntry {
         // are untouched (spec'd), so the oracle now covers save →
         // append → compact → load → serve end to end
         OpqIvfPqIndex.compactSaved(s, path)
-        marker.createNewFile(): Unit
       }
       val idx = OpqIvfPqIndex.load(s, path)
       require(idx.model.lossless,
@@ -4266,22 +4257,8 @@ object SparkEntry {
       require(model.lossless,
         "ann_opq_ivfpq_stream_ingest requires the lossless codebook " +
           "degenerate — corpus outgrew maxTrain")
-      val src = new java.io.File(s"$d/embeddings.parquet")
-      require(src.isFile,
-        s"ann_opq_ivfpq_stream_ingest fingerprints $src (driver fixtures " +
-          "are single parquet files); for other layouts use " +
-          "StreamOps.annIngestPerBatch directly")
-      val fp = s"${src.lastModified}_${src.length}"
-      val base = s"graft_opqivfpq_ingest_${d.replaceAll("[^A-Za-z0-9]", "_")}"
-      val path = s"/tmp/${base}_$fp"
-      reapStaleIvfCaches(new java.io.File("/tmp"), base, s"${base}_$fp")
-      val marker = new java.io.File(s"$path/_ingest_complete")
-      if (!marker.exists()) {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-          f.delete(): Unit
-        }
-        rm(new java.io.File(path))
+      val path = fixtureLayout("graft_opqivfpq_ingest", d,
+          "ann_opq_ivfpq_stream_ingest") { path =>
         val half = OpqIvfPqIndex.withArtifacts(
           e.where(col("vec_id") % 2 === 0), "embedding",
           OpqIndex.identityRotation(dim), Array(Array.fill(dim)(0f)), model,
@@ -4292,7 +4269,6 @@ object SparkEntry {
         val q = StreamOps.annIngestPerBatch(stream, half, path, "embedding",
           baselineSelfSim = Some(1.0), compactFilesPerCell = 1)
         try q.processAllAvailable() finally q.stop()
-        marker.createNewFile(): Unit
       }
       val idx = OpqIvfPqIndex.load(s, path)
       require(idx.model.lossless,
@@ -4330,21 +4306,7 @@ object SparkEntry {
     "ann_ivf_stream_ingest" -> ((s, d) => {
       val e = Tables(s, d, "embeddings")
       val frozen = ivfFor(s, d).centroidVectors
-      val src = new java.io.File(s"$d/embeddings.parquet")
-      require(src.isFile,
-        s"ann_ivf_stream_ingest fingerprints $src (driver fixtures are " +
-          "single parquet files)")
-      val fp = s"${src.lastModified}_${src.length}"
-      val base2 = s"graft_ivf_ingest_${d.replaceAll("[^A-Za-z0-9]", "_")}"
-      val path = s"/tmp/${base2}_$fp"
-      reapStaleIvfCaches(new java.io.File("/tmp"), base2, s"${base2}_$fp")
-      val marker = new java.io.File(s"$path/_ingest_complete")
-      if (!marker.exists()) {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-          f.delete(): Unit
-        }
-        rm(new java.io.File(path))
+      val path = fixtureLayout("graft_ivf_ingest", d, "ann_ivf_stream_ingest") { path =>
         val half = IvfIndex.withCentroids(
           e.where(col("vec_id") % 2 === 0), "embedding", frozen)
         half.save(path)
@@ -4353,7 +4315,6 @@ object SparkEntry {
         val q = StreamOps.ivfIngestPerBatch(stream, half, path,
           compactFilesPerCell = 1)
         try q.processAllAvailable() finally q.stop()
-        marker.createNewFile(): Unit
       }
       val idx = IvfIndex.load(s, path)
       val q = e.filter(col("vec_id") === 0).select("embedding")

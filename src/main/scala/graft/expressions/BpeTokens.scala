@@ -94,7 +94,7 @@ object BpeTokens {
   /** The kernel, callable from generated Java (static forwarder):
     * lowercase, whitespace-split, BPE-apply each word, concatenate. */
   def tokenize(u: UTF8String, rt: BpeRuntime): ArrayData = {
-    val text = u.toString.toLowerCase(java.util.Locale.ROOT)
+    val text = ShingleHashes.lowerRoot(u.toString)
     val out = scala.collection.mutable.ArrayBuffer.empty[UTF8String]
     val n = text.length
     var start = 0; var i = 0

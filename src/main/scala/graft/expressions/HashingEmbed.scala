@@ -48,7 +48,7 @@ case class HashingEmbed(child: Expression, dim: Int, seed: Int = 42)
 object HashingEmbed {
   /** The hashing kernel, callable from generated Java (static forwarder). */
   def embedText(u: UTF8String, dim: Int, seed: Int): ArrayData = {
-    val text = u.toString.toLowerCase(java.util.Locale.ROOT) // locale-pinned: executor JVM locale must not change embeddings
+    val text = ShingleHashes.lowerRoot(u.toString) // locale-pinned: executor JVM locale must not change embeddings
     val out = new Array[Float](dim)
     // manual whitespace scan: no regex compile, no token array allocation
     val n = text.length

@@ -1,9 +1,11 @@
 package graft.expressions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
 /**
@@ -84,6 +86,95 @@ case class NearestCells(child: Expression, centroids: Array[Float], dim: Int,
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
+/** The IVF PROBE rule per query row — the `nprobe` cells whose
+  * centroids score the highest COSINE against the query, best first:
+  * Spark's `desc` total order on the score (NaN greatest, -0.0 equal to
+  * +0.0), ties to the lower cell id. Cosine is
+  * `vectors.cosine_similarity(centroid, query)` exactly (double
+  * accumulation over the common prefix, zero norm scores 0.0), and a
+  * NULL query scores 0.0 against every cell (the reference's
+  * NULL-scores-0 rule), so it probes cells `0 until nprobe`. A table of
+  * queries probes with no join, no shuffle and no aggregate: the
+  * centroid table rides the generated code, as in [[NearestCell]].
+  * Single-query `search` calls the same kernel driver-side
+  * ([[NearestCell.probeTop]]), so every probe of the ANN family is this
+  * one rule. */
+case class ProbeCells(child: Expression, centroids: Array[Float], dim: Int,
+    nprobe: Int) extends UnaryExpression {
+
+  require(dim > 0 && centroids.length % dim == 0,
+    s"flattened centroids (${centroids.length}) must be a multiple of dim ($dim)")
+  require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
+
+  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
+  override def nullable: Boolean = false
+  override def prettyName: String = "probe_cells"
+
+  private def isFloat: Boolean =
+    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"probe_cells requires array<float> or array<double>, got ${other.catalogString}")
+  }
+
+  override def eval(input: InternalRow): Any = new GenericArrayData(
+    NearestCell.probeTop(child.eval(input).asInstanceOf[ArrayData], isFloat,
+      centroids, dim, nprobe))
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val q = child.genCode(ctx)
+    val cents = ctx.addReferenceObj("ivfCentroids", centroids, "float[]")
+    ev.copy(code = code"""
+      ${q.code}
+      ArrayData ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
+        graft.expressions.NearestCell.probeTop(${q.isNull} ? null : ${q.value},
+          $isFloat, $cents, $dim, $nprobe));""", isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+}
+
+/** `dot(centroid(cell), query)` — the per-(query, cell) `q·centroid`
+  * addend of residual-coded ADC, evaluated against the resident
+  * centroid table: `vectors.dot_product(centroid, query)` exactly
+  * (double accumulation over the common prefix). NULL query or cell
+  * yields NULL. */
+case class CellDot(query: Expression, cell: Expression, centroids: Array[Float],
+    dim: Int) extends BinaryExpression {
+
+  require(dim > 0 && centroids.length % dim == 0,
+    s"flattened centroids (${centroids.length}) must be a multiple of dim ($dim)")
+
+  override def left: Expression = query
+  override def right: Expression = cell
+  override def dataType: DataType = DoubleType
+  override def nullIntolerant: Boolean = true
+  override def prettyName: String = "cell_dot"
+
+  private def isFloat: Boolean =
+    query.dataType.asInstanceOf[ArrayType].elementType == FloatType
+
+  override def checkInputDataTypes(): TypeCheckResult = (query.dataType, cell.dataType) match {
+    case (ArrayType(FloatType | DoubleType, _), IntegerType) => TypeCheckResult.TypeCheckSuccess
+    case (q, c) => TypeCheckResult.TypeCheckFailure(
+      s"cell_dot requires (array<float|double>, int), got (${q.catalogString}, ${c.catalogString})")
+  }
+
+  override def nullSafeEval(q: Any, c: Any): Any =
+    NearestCell.cellDot(q.asInstanceOf[ArrayData], isFloat, c.asInstanceOf[Int], centroids, dim)
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val cents = ctx.addReferenceObj("ivfCentroids", centroids, "float[]")
+    nullSafeCodeGen(ctx, ev, (q, c) =>
+      s"${ev.value} = graft.expressions.NearestCell.cellDot($q, $isFloat, $c, $cents, $dim);")
+  }
+
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+    copy(query = l, cell = r)
+}
+
 object NearestCell {
 
   /** argmin_c ‖v − centroid_c‖² in double accumulation; strict `<` ⇒
@@ -150,5 +241,84 @@ object NearestCell {
       c += 1
     }
     new org.apache.spark.sql.catalyst.util.GenericArrayData(cells)
+  }
+
+  /** [[ProbeCells]]' kernel, callable from generated Java: the
+    * `min(nprobe, nlist)` cells of highest cosine against `q` (read as
+    * float or double; NULL scores 0.0 everywhere), best first, in
+    * Spark's `desc` total order with ties to the lower cell. Cells scan
+    * in ascending id and an entry moves ahead only of strictly worse
+    * ones, so equal scores keep ascending cell order. */
+  def probeTop(q: ArrayData, isFloat: Boolean, centroids: Array[Float], dim: Int,
+      nprobe: Int): Array[Int] = {
+    val nlist = centroids.length / dim
+    val n = if (q == null) 0 else math.min(q.numElements(), dim)
+    val k = math.max(0, math.min(nprobe, nlist))
+    val scores = new Array[Double](k)
+    val cells = new Array[Int](k)
+    var filled = 0
+    var c = 0
+    while (c < nlist) {
+      val off = c * dim
+      var dot = 0.0; var na = 0.0; var nb = 0.0
+      var j = 0
+      while (j < n) {
+        val x = centroids(off + j).toDouble
+        val y = if (isFloat) q.getFloat(j).toDouble else q.getDouble(j)
+        dot += x * y; na += x * x; nb += y * y
+        j += 1
+      }
+      val denom = math.sqrt(na) * math.sqrt(nb)
+      val s = if (denom == 0.0) 0.0 else dot / denom
+      if (filled < k || (k > 0 && descBefore(s, scores(k - 1)))) {
+        var p = if (filled < k) { filled += 1; filled - 1 } else k - 1
+        while (p > 0 && descBefore(s, scores(p - 1))) {
+          scores(p) = scores(p - 1); cells(p) = cells(p - 1); p -= 1
+        }
+        scores(p) = s; cells(p) = c
+      }
+      c += 1
+    }
+    cells
+  }
+
+  /** `a` strictly before `b` in Spark's `desc` order: NaN greatest,
+    * -0.0 equal to +0.0 (the [[graft.functions.TopKScored]] order). */
+  @inline private def descBefore(a: Double, b: Double): Boolean =
+    a != b && java.lang.Double.compare(a, b) > 0
+
+  /** [[CellDot]]'s kernel: `Σ centroid(cell)ᵢ · qᵢ` over the common
+    * prefix, double accumulation, centroid element first — the
+    * `vectors.dot_product(centroid, query)` arithmetic. */
+  def cellDot(q: ArrayData, isFloat: Boolean, cell: Int, centroids: Array[Float],
+      dim: Int): Double = {
+    val off = cell * dim
+    require(cell >= 0 && off < centroids.length,
+      s"cell $cell is outside the ${centroids.length / dim}-cell centroid table")
+    val n = math.min(q.numElements(), dim)
+    var s = 0.0
+    var j = 0
+    while (j < n) {
+      s += centroids(off + j).toDouble * (if (isFloat) q.getFloat(j).toDouble else q.getDouble(j))
+      j += 1
+    }
+    s
+  }
+
+  /** Row-major flat copy of a centroid table — the form the map-side
+    * kernels carry into generated code. Refuses an empty or ragged
+    * table. */
+  def flatten(centroidVectors: Array[Array[Float]]): (Array[Float], Int) = {
+    require(centroidVectors.nonEmpty, "centroid table is empty")
+    val dim = centroidVectors.head.length
+    require(centroidVectors.forall(_.length == dim),
+      "ragged centroid table: all centroids must share one dimension")
+    val flat = new Array[Float](centroidVectors.length * dim)
+    var c = 0
+    while (c < centroidVectors.length) {
+      System.arraycopy(centroidVectors(c), 0, flat, c * dim, dim)
+      c += 1
+    }
+    (flat, dim)
   }
 }

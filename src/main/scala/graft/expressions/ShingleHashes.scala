@@ -124,7 +124,20 @@ object ShingleHashes {
     * invariant. They all split through [[Tokens]], the regex-free form
     * of this function (pinned equal to it by `ShingleKernelSpec`). */
   def tokenize(u: UTF8String): Array[String] =
-    WsPattern.split(u.toString.toLowerCase(java.util.Locale.ROOT)).filter(_.nonEmpty)
+    WsPattern.split(lowerRoot(u.toString)).filter(_.nonEmpty)
+
+  /** `s.toLowerCase(Locale.ROOT)`, in linear time. On JDK 17 the ROOT
+    * lowering copies its whole output each time a char lowers to two
+    * chars, and U+0130 `İ` is the one char that does (to `i` U+0069 +
+    * combining dot U+0307), so a text full of `İ` lowered in quadratic
+    * time. Rewriting each `İ` to `I` + U+0307 first gives the same
+    * output: `I` lowers to `i`, U+0307 is its own lowercase, and being
+    * case-ignorable it leaves the final-sigma context of every `Σ` as it
+    * was. Pinned equal to `toLowerCase(Locale.ROOT)` by
+    * `ShingleKernelSpec`. */
+  def lowerRoot(s: String): String =
+    (if (s.indexOf('\u0130') < 0) s else s.replace("\u0130", "I\u0307"))
+      .toLowerCase(java.util.Locale.ROOT)
 
   /** Shared 64-bit base hash of one shingle string: two fixed-seed
     * MurmurHash3 32-bit words. Same bit-identity requirement as
@@ -146,7 +159,7 @@ object ShingleHashes {
     * [[PositionalShingleHashes]], [[MinHashSig]] and [[RepetitionStats]]
     * all hash through [[Tokens.gramHashes]]. */
   private[expressions] final class Tokens(u: UTF8String) {
-    private val chars = u.toString.toLowerCase(java.util.Locale.ROOT).toCharArray
+    private val chars = lowerRoot(u.toString).toCharArray
     // end offset of each token in the compacted `chars`; token i starts
     // one past the end of token i - 1 (at 0 for the first), as exactly
     // one space separates tokens after compaction

@@ -48,7 +48,7 @@ object SimHash64 {
   /** The simhash kernel, callable from generated Java (static forwarder). */
   def simhashText(u: UTF8String, shingleSize: Int, seed: Int): Long = {
     val toks = ShingleHashes.WsPattern // locale-pinned fingerprints, pinned ws class
-      .split(u.toString.toLowerCase(java.util.Locale.ROOT)).filter(_.nonEmpty)
+      .split(ShingleHashes.lowerRoot(u.toString)).filter(_.nonEmpty)
     val votes = new Array[Int](64)
     val n = math.max(0, toks.length - shingleSize + 1)
     var i = 0

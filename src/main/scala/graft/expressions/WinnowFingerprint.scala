@@ -62,7 +62,7 @@ object WinnowFingerprint {
     * sorted distinct selected k-gram hashes. */
   def winnow(u: UTF8String, k: Int, w: Int): Array[Long] = {
     // normalize: lowercase, collapse whitespace runs to single spaces
-    val raw = u.toString.toLowerCase(java.util.Locale.ROOT) // locale-pinned: tr-locale dotless-i must not fork fingerprints
+    val raw = ShingleHashes.lowerRoot(u.toString) // locale-pinned: tr-locale dotless-i must not fork fingerprints
     val sb = new java.lang.StringBuilder(raw.length)
     var i = 0
     var lastSpace = true // also trims leading whitespace

@@ -23,9 +23,14 @@ import org.apache.spark.sql.functions.{broadcast, coalesce, col, explode, lit}
  *   in-plan for a query table;
  * - `search` plans one job: pushable cell predicate over the coded
  *   corpus, one ADC table, `TakeOrderedAndProject` tail;
- * - `searchMany` is fully distributed: broadcast-scored probe cells,
- *   cell join against CODES (never raw vectors), bounded-heap top-k
- *   per query — no ranking windows, no driver id-collect;
+ * - `searchMany` is fully distributed: probe cells assigned map-side
+ *   per query row (the one [[graft.expressions.ProbeCells]] rule,
+ *   which single-query `search` runs driver-side), the probed query
+ *   table broadcast once into the cell join against CODES (never raw
+ *   vectors), bounded-heap top-k per query — no ranking windows, no
+ *   driver id-collect;
+ * - [[AnnIndex.open]] runs no Spark job: the artifacts read
+ *   driver-side and the data scan's schema comes from one footer;
  * - the refine forms re-rank the shortlist EXACT on raw vectors
  *   (per-query through a pushed id predicate bounded by
  *   `maxShortlist`; batch through the fully-distributed
@@ -135,7 +140,9 @@ trait AnnIndex extends Serializable {
     * — by contract the IDENTICAL probe-assignment block the serving
     * plan runs (any pretransform applied inside, like `searchMany`),
     * so costs priced from this metadata are the costs paid at serve
-    * time. nQ·nprobe rows; never corpus-scale. */
+    * time. nQ·nprobe rows, one per (query row, cell), assigned map-side;
+    * never corpus-scale. Rows with a NULL query id probe nothing, as
+    * `searchMany` serves them nothing. */
   def probesMany(queries: DataFrame, queryIdCol: String,
       queryEmbCol: String, nprobe: Int): DataFrame
 }
@@ -419,9 +426,9 @@ object AnnIndex {
       * exactly as before. No corpus scan, no search — the one
       * corpus-touching pass is [[cellRows]]' count aggregation, paid
       * once. The mean denominates by the DISTINCT query ids actually
-      * present in each np's probes (r19 ADVICE): NULL/zero-norm
-      * embeddings and duplicate query ids produce no probe rows of
-      * their own yet count toward nQ, so dividing by nQ would silently
+      * present in each np's probes (r19 ADVICE): NULL query ids probe
+      * nothing and a duplicate query id prices its probed cells once,
+      * yet both count toward nQ, so dividing by nQ would silently
       * deflate the mean and break the documented "nprobe = nlist scans
       * exactly the corpus size" anchor for those inputs — the cost
       * reported is per query that actually probes, which is the query
@@ -432,10 +439,13 @@ object AnnIndex {
           .select(col(queryIdCol), col("cell"), lit(np).as("__np"))
       }.reduce(_ unionByName _).collect()
       nps.map { np =>
-        val rows = probed.filter(_.getInt(2) == np)
-        val nProbing = rows.iterator.map(_.get(0)).toSet.size
+        // one (query id, cell) pair per probed cell of a query id: rows
+        // sharing an id probe their vectors separately, and the id
+        // scans each cell once
+        val pairs = probed.filter(_.getInt(2) == np).map(r => (r.get(0), r.getInt(1))).distinct
+        val nProbing = pairs.iterator.map(_._1).toSet.size
         np -> (if (nProbing == 0) 0.0
-          else rows.map(r => cellRows.getOrElse(r.getInt(1), 0L)).sum.toDouble / nProbing)
+          else pairs.map(p => cellRows.getOrElse(p._2, 0L)).sum.toDouble / nProbing)
       }.toMap
     }
   }

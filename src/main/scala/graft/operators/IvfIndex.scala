@@ -68,12 +68,13 @@ class IvfIndex private (
   /**
    * Batch ANN: top-k for a whole TABLE of queries, fully distributed —
    * no per-query driver round-trip, so it scales to millions of
-   * queries. Plan: broadcast-score queries × centroids → per-query
-   * top-nprobe cells (bounded-heap aggregate) → explode probes → join
-   * corpus ON CELL (hash join on an int key — only probed cells'
-   * vectors meet each query) → exact score → per-query top-k via the
-   * bounded-heap aggregate again. Shuffles carry cell ids and k-capped
-   * candidate lists, never the corpus².
+   * queries. Plan: map-side probe assignment
+   * ([[IvfIndex.probedQueries]] — each query row once per probed cell,
+   * scored against the resident centroids in generated code) →
+   * broadcast → join corpus ON CELL (hash join on an int key — only
+   * probed cells' vectors meet each query) → exact score → per-query
+   * top-k via the bounded-heap aggregate. The one shuffle carries
+   * k-capped candidate lists, never the corpus².
    */
   def searchMany(queries: DataFrame, queryIdCol: String, queryEmbCol: String,
       corpusIdCol: String, k: Int, nprobe: Int = 4,
@@ -85,15 +86,9 @@ class IvfIndex private (
     val idType = indexed.schema(corpusIdCol).dataType
     require(Seq(ByteType, ShortType, IntegerType, LongType).contains(idType),
       s"searchMany buffers corpus ids as long, but '$corpusIdCol' is ${idType.simpleString}")
-    val probes = IvfIndex.probesForQueries(centroids, queries, queryIdCol,
-      queryEmbCol, nprobe)
-    // two separate broadcasts: the (queryId, cell) probe list is narrow,
-    // and each query's embedding ships ONCE — pre-joining them would
-    // replicate every embedding nprobe times through the broadcast
-    val candidates = indexed
-      .join(broadcast(probes), Seq("cell"))
-      .join(broadcast(queries), Seq(queryIdCol))
-    candidates
+    indexed
+      .join(broadcast(IvfIndex.probedQueries(queries, queryIdCol, queryEmbCol,
+        centroidVectors, nprobe)), Seq("cell"))
       .select(col(queryIdCol), col(corpusIdCol).cast("long").as(corpusIdCol),
         vectors.cosine_similarity(col(embCol), col(queryEmbCol)).as(simCol))
       .groupBy(col(queryIdCol))
@@ -227,8 +222,8 @@ class IvfIndex private (
       override def cellSizeStats: DataFrame = self.cellSizeStats
       override def probesMany(queries: DataFrame, queryIdCol: String,
           queryEmbCol: String, nprobe: Int): DataFrame =
-        IvfIndex.probesForQueries(self.centroids, queries, queryIdCol,
-          queryEmbCol, nprobe)
+        IvfIndex.probedQueries(queries, queryIdCol, queryEmbCol,
+          self.centroidVectors, nprobe).select(queryIdCol, "cell")
     }
   }
 
@@ -355,23 +350,19 @@ object IvfIndex {
   /** Cells a query vector would probe, best centroid first — the
     * coarse-quantizer half shared with the IVFADC composition
     * ([[IvfPqIndex]]). Pure driver-local arithmetic over the resident
-    * centroid array (≤ nlist rows), no Spark job. */
+    * centroid array (≤ nlist rows), no Spark job: the
+    * [[graft.expressions.ProbeCells]] kernel every `searchMany` runs
+    * map-side, called on the one query vector — so single-query and
+    * batch search probe by one rule. */
   private[operators] def probe(centroidVectors: Array[Array[Float]],
-      queryVec: Array[Float], nprobe: Int): Array[Int] = {
-    // Mirror Spark's `desc` total order exactly (NaN greatest, -0.0 and
-    // +0.0 equal): a plain sortBy(-s) would sort NaN last and order a
-    // ±0.0 pair by negation sign instead of the asc-cell tie-break.
-    val order = new Ordering[(Double, Int)] {
-      def compare(a: (Double, Int), b: (Double, Int)): Int = {
-        val c = if (a._1 == b._1) 0 else java.lang.Double.compare(b._1, a._1)
-        if (c != 0) c else Integer.compare(a._2, b._2)
-      }
+      queryVec: Array[Float], nprobe: Int): Array[Int] =
+    if (centroidVectors.isEmpty) Array.empty
+    else {
+      val (flat, dim) = graft.expressions.NearestCell.flatten(centroidVectors)
+      graft.expressions.NearestCell.probeTop(
+        org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(queryVec),
+        isFloat = true, flat, dim, nprobe)
     }
-    centroidVectors.zipWithIndex
-      .map { case (c, i) => (cosineLocal(c, queryVec), i) }
-      .sorted(order)
-      .take(nprobe).map(_._2)
-  }
 
   /** The tier-independent skeleton every streaming ingest shares,
     * EXACTLY-ONCE since round 20 (r19 VERDICT #1 — the marker-after-
@@ -436,9 +427,9 @@ object IvfIndex {
     val staging = new org.apache.hadoop.fs.Path(ingestDir, s"staging_$batchId")
     val dataDir = new org.apache.hadoop.fs.Path(s"$dataTreeRoot/data")
     val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // the fullest cell's file count, from the driver-side listing
     def cadence(): Unit = {
-      val maxFiles = dataTreeStats(spark, dataTreeRoot)
-        .agg(max(col("n_files"))).head().getLong(0)
+      val maxFiles = cellFiles(fs, dataDir).map(_._2.length).maxOption.getOrElse(0)
       if (maxFiles > compactFilesPerCell) compact()
     }
     if (fs.exists(marker)) {
@@ -555,25 +546,38 @@ object IvfIndex {
     fs.delete(staging, true): Unit
   }
 
-  /** The (queryId, cell) probe assignment every `searchMany` in the
-    * family plans — broadcast-score queries × centroids, per-query
-    * top-`nprobe` cells by the bounded-heap aggregate, explode. Shared
-    * verbatim by [[IvfIndex.searchMany]], [[IvfPqIndex.searchMany]],
-    * and the [[AnnIndex.probesMany]] telemetry seam, so the cost a
-    * deployment prices from the metadata is BY CONSTRUCTION the cost
-    * the serving plan pays. nQ·nlist broadcast-side rows in, nQ·nprobe
-    * rows out — never corpus-scale. */
-  private[operators] def probesForQueries(centroids: DataFrame,
-      queries: DataFrame, queryIdCol: String, queryEmbCol: String,
-      nprobe: Int): DataFrame = {
-    import graft.functions.TopKScored
-    centroids.crossJoin(broadcast(queries))
-      .select(col(queryIdCol), col("cell").cast("long").as("cell"),
-        vectors.cosine_similarity(col("centroid"), col(queryEmbCol)).as("__csim"))
-      .groupBy(col(queryIdCol))
-      .agg(TopKScored.column(nprobe)(col("__csim"), col("cell")).as("__cells"))
-      .select(col(queryIdCol), explode(col("__cells.id")).as("cell"))
-      .select(col(queryIdCol), col("cell").cast("int").as("cell"))
+  /** The probe block every `searchMany` in the family plans: each query
+    * row with a non-NULL id, once per probed cell —
+    * (queryIdCol, queryEmbCol, cell), plus `__qc` = q·centroid(cell)
+    * when `withAddend` (residual coding). Map-side: the
+    * [[graft.expressions.ProbeCells]] kernel evaluates [[probe]]'s rule
+    * per row against the resident centroid table, then one explode — no
+    * join, no shuffle, no aggregate, so it plans no job of its own.
+    * [[IvfIndex.searchMany]] and [[IvfPqIndex.searchMany]] broadcast
+    * this frame into their corpus cell join, and the
+    * [[AnnIndex.probesMany]] telemetry seam selects its (id, cell) pairs,
+    * so the cost a deployment prices from the metadata is BY
+    * CONSTRUCTION the cost the serving plan pays. nQ·nprobe rows —
+    * never corpus-scale; the broadcast carries each query vector once
+    * per probed cell. Each query row probes by its own vector: duplicate
+    * ids probe separately. A NULL query vector scores 0.0 against every
+    * cell, so it probes cells `0 until nprobe` and its candidates score
+    * 0.0 (the NULL-scores-0 rule); rows with a NULL id serve nothing. */
+  private[operators] def probedQueries(queries: DataFrame, queryIdCol: String,
+      queryEmbCol: String, centroidVectors: Array[Array[Float]], nprobe: Int,
+      withAddend: Boolean = false): DataFrame = {
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    import graft.expressions.{CellDot, NearestCell, ProbeCells}
+    val (flat, dim) = NearestCell.flatten(centroidVectors)
+    val probed = queries
+      .where(col(queryIdCol).isNotNull)
+      .select(col(queryIdCol), col(queryEmbCol),
+        explode(ColumnBridge.column(ProbeCells(
+          ColumnBridge.expression(col(queryEmbCol)), flat, dim, nprobe))).as("cell"))
+    if (!withAddend) probed
+    else probed.withColumn("__qc", ColumnBridge.column(CellDot(
+      ColumnBridge.expression(col(queryEmbCol)), ColumnBridge.expression(col("cell")),
+      flat, dim)))
   }
 
   /** Double-accumulated plain dot product, driver-side — the per-cell
@@ -583,19 +587,6 @@ object IvfIndex {
     var d = 0.0; var i = 0
     while (i < n) { d += a(i).toDouble * b(i); i += 1 }
     d
-  }
-
-  /** Double-accumulated cosine, zero-norm → 0 — the same contract as
-    * `vectors.cosine_similarity`, evaluated driver-side. */
-  private[operators] def cosineLocal(a: Array[Float], b: Array[Float]): Double = {
-    val n = math.min(a.length, b.length)
-    var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-    while (i < n) {
-      dot += a(i).toDouble * b(i); na += a(i).toDouble * a(i); nb += b(i).toDouble * b(i)
-      i += 1
-    }
-    val d = math.sqrt(na) * math.sqrt(nb)
-    if (d == 0) 0.0 else dot / d
   }
 
   /** An index over `df` with a FROZEN, externally-supplied quantizer —
@@ -630,16 +621,7 @@ object IvfIndex {
     * (same kernel tie rule, spec'd). NULL vectors are excluded. */
   private[operators] def assignWithCentroidsMulti(df: DataFrame, embCol: String,
       centroidVectors: Array[Array[Float]], nprobe: Int): DataFrame = {
-    require(centroidVectors.nonEmpty, "centroid table is empty")
-    val dim = centroidVectors.head.length
-    require(centroidVectors.forall(_.length == dim),
-      "ragged centroid table: all centroids must share one dimension")
-    val flat = new Array[Float](centroidVectors.length * dim)
-    var c = 0
-    while (c < centroidVectors.length) {
-      System.arraycopy(centroidVectors(c), 0, flat, c * dim, dim)
-      c += 1
-    }
+    val (flat, dim) = graft.expressions.NearestCell.flatten(centroidVectors)
     import org.apache.spark.sql.graftbridge.ColumnBridge
     df.where(col(embCol).isNotNull)
       .withColumn("cell", explode(ColumnBridge.column(
@@ -651,16 +633,7 @@ object IvfIndex {
     * NULL vectors are excluded, as in [[build]]. */
   private[graft] def assignWithCentroids(df: DataFrame, embCol: String,
       centroidVectors: Array[Array[Float]]): DataFrame = {
-    require(centroidVectors.nonEmpty, "centroid table is empty")
-    val dim = centroidVectors.head.length
-    require(centroidVectors.forall(_.length == dim),
-      "ragged centroid table: all centroids must share one dimension")
-    val flat = new Array[Float](centroidVectors.length * dim)
-    var c = 0
-    while (c < centroidVectors.length) {
-      System.arraycopy(centroidVectors(c), 0, flat, c * dim, dim)
-      c += 1
-    }
+    val (flat, dim) = graft.expressions.NearestCell.flatten(centroidVectors)
     import org.apache.spark.sql.graftbridge.ColumnBridge
     df.where(col(embCol).isNotNull)
       .withColumn("cell", ColumnBridge.column(graft.expressions.NearestCell(
@@ -793,16 +766,25 @@ object IvfIndex {
     val fs = dataPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.exists(dataPath),
       s"$path/data does not exist — not a saved cell-partitioned layout")
-    fs.listStatus(dataPath).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("cell="))
-      .map { st =>
-        val files = fs.listStatus(st.getPath).filter(f => f.isFile &&
-          !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
-        (st.getPath.getName.stripPrefix("cell=").toInt,
+    cellFiles(fs, dataPath)
+      .map { case (d, files) =>
+        (d.getPath.getName.stripPrefix("cell=").toInt,
           files.length.toLong, files.map(_.getLen).sum)
       }
       .toDF("cell", "n_files", "bytes")
   }
+
+  /** Each `cell=` directory of a data tree with its data files (names
+    * starting with `_` or `.` skipped) — the one driver-side listing
+    * behind [[dataTreeStats]], the ingest compaction cadence and
+    * [[compactDataTree]]'s drift check and row counts. */
+  private def cellFiles(fs: org.apache.hadoop.fs.FileSystem,
+      dataPath: org.apache.hadoop.fs.Path)
+      : Seq[(org.apache.hadoop.fs.FileStatus, Seq[org.apache.hadoop.fs.FileStatus])] =
+    fs.listStatus(dataPath).toSeq
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith("cell="))
+      .map(d => d -> fs.listStatus(d.getPath).toSeq.filter(f => f.isFile &&
+        !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith(".")))
 
   /** COMPACT a cell-partitioned `$path/data` tree in place — the
     * shared rewrite behind [[IvfIndex.compactSaved]] and
@@ -864,42 +846,45 @@ object IvfIndex {
     // (relative file, length) listing of the source tree — captured
     // now, re-checked right before the swap: drift means a concurrent
     // writer, whose rows the swap would silently delete
-    def sourceListing(): Set[(String, Long)] =
-      fs.listStatus(dataPath).toSeq
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("cell="))
-        .flatMap { d =>
-          fs.listStatus(d.getPath).toSeq.filter(f => f.isFile &&
-              !f.getPath.getName.startsWith("_") &&
-              !f.getPath.getName.startsWith("."))
-            .map(f => (d.getPath.getName + "/" + f.getPath.getName, f.getLen))
-        }.toSet
-    val sourceBefore = sourceListing()
-    val df = spark.read.parquet(s"$path/data")
-    val nRows = df.count()
-    val cellStats = dataTreeStats(spark, path).select("cell", "bytes").collect()
-    val totalBytes = cellStats.map(_.getLong(1)).sum
+    def sourceListing(cells: Seq[(org.apache.hadoop.fs.FileStatus,
+        Seq[org.apache.hadoop.fs.FileStatus])]): Set[(String, Long)] =
+      cells.flatMap { case (d, files) =>
+        files.map(f => (d.getPath.getName + "/" + f.getPath.getName, f.getLen))
+      }.toSet
+    val cells = cellFiles(fs, dataPath)
+    val sourceBefore = sourceListing(cells)
+    // row counts come from the footers of the listed files (the counts
+    // `spark.read.parquet(...).count()` returns, without its jobs), and
+    // the scan's schema from one footer
+    val nRows = ParquetArtifacts.rowCount(spark,
+      ParquetArtifacts.dataFiles(fs, dataPath))
+    val df = ParquetArtifacts.cellTree(spark, s"$path/data")
+    val cellStats = cells.map { case (d, files) =>
+      (d.getPath.getName.stripPrefix("cell=").toInt, files.map(_.getLen).sum)
+    }
+    val totalBytes = cellStats.map(_._2).sum
     val maxRecords = math.max(1L,
       if (totalBytes <= 0L || nRows == 0L) Long.MaxValue
       else targetFileBytes / math.max(1L, totalBytes / nRows))
     // per-cell salt widths from the measured bytes (nlist-sized frame)
     import spark.implicits._
-    val subCounts = cellStats.toSeq
-      .map(r => (r.getInt(0),
-        math.max(1L, (r.getLong(1) + targetFileBytes - 1) / targetFileBytes)))
+    val subCounts = cellStats
+      .map { case (c, bytes) =>
+        (c, math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes)) }
       .toDF("cell", "__n_sub")
     saltedForCompaction(df, subCounts)
       .repartition(col("cell"), col("__salt"))
       .drop("__salt", "__n_sub")
       .write.option("maxRecordsPerFile", maxRecords)
       .partitionBy("cell").parquet(tmpPath.toString)
-    val nTmp = spark.read.parquet(tmpPath.toString).count()
+    val nTmp = ParquetArtifacts.rowCount(spark, ParquetArtifacts.dataFiles(fs, tmpPath))
     if (nTmp != nRows) {
       fs.delete(tmpPath, true)
       throw new IllegalStateException(
         s"compacted tree holds $nTmp rows, source holds $nRows — aborted " +
           "and deleted the staging tree; the original layout is untouched")
     }
-    val sourceAfter = sourceListing()
+    val sourceAfter = sourceListing(cellFiles(fs, dataPath))
     if (sourceAfter != sourceBefore) {
       fs.delete(tmpPath, true)
       throw new IllegalStateException(
@@ -1084,17 +1069,27 @@ object IvfIndex {
   }
 
   /** Reopen a saved index. The data scan comes from the cell-partitioned
-    * layout, so subsequent probe filters prune at the file level.
+    * layout, so subsequent probe filters prune at the file level. No
+    * Spark job runs: the centroids read driver-side and the scan's
+    * schema comes from one footer ([[ParquetArtifacts]]).
     * Refuses through [[requireSaved]] — including while a
     * [[repairSaved]] crash sentinel exists. */
   def load(spark: org.apache.spark.sql.SparkSession, path: String): IvfIndex = {
     val embCol = sidecarField(requireSaved(spark, path), "embedding_column")
       .getOrElse("embedding")
-    // by-name read: a rewritten centroids file with reordered columns
-    // must fail by name, not silently misread by ordinal
-    val cents = spark.read.parquet(s"$path/centroids")
-      .select("cell", "centroid").orderBy("cell").collect()
-      .map(_.getAs[scala.collection.Seq[Float]]("centroid").toArray)
-    new IvfIndex(cents, spark.read.parquet(s"$path/data"), embCol)
+    new IvfIndex(readCentroids(spark, path),
+      ParquetArtifacts.cellTree(spark, s"$path/data"), embCol)
+  }
+
+  /** The saved centroid table, ordered by cell — driver-local, BY NAME
+    * ([[ParquetArtifacts]]): a rewritten centroids file with reordered
+    * columns reads the same, a missing column refuses by name. Shared
+    * by every tier's loader. */
+  private[operators] def readCentroids(spark: org.apache.spark.sql.SparkSession,
+      path: String): Array[Array[Float]] = {
+    import ParquetArtifacts.{FloatsKind, IntKind}
+    ParquetArtifacts.read(spark, s"$path/centroids", "cell" -> IntKind,
+        "centroid" -> FloatsKind)
+      .sortBy(_(0).asInstanceOf[Int]).map(_(1).asInstanceOf[Array[Float]]).toArray
   }
 }

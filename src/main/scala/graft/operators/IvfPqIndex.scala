@@ -113,11 +113,14 @@ class IvfPqIndex private (
   /**
    * Batch ANN over the coded corpus: top-k for a whole TABLE of
    * queries, fully distributed — [[IvfIndex.searchMany]]'s plan shape
-   * (broadcast-score queries × centroids → per-query top-nprobe cells
-   * → explode → join corpus ON CELL → score → bounded-heap top-k per
-   * query) with one structural difference that is the point: the
-   * corpus side of the cell join carries m·codeBytes-byte CODES, not
-   * 4d-byte vectors, so the join/shuffle bytes drop ~16× at d=64/m=8.
+   * (map-side probe assignment → broadcast → join corpus ON CELL →
+   * score → bounded-heap top-k per query) with one structural
+   * difference that is the point: the corpus side of the cell join
+   * carries m·codeBytes-byte CODES, not 4d-byte vectors, so the
+   * join/shuffle bytes drop ~16× at d=64/m=8. The broadcast side is
+   * [[IvfIndex.probedQueries]]: each query row once per probed cell,
+   * carrying under residual coding its per-(query, cell) `q·centroid`
+   * addend (`__qc`, computed once per probe row, never per candidate).
    * Scoring indexes the codebooks per (query, code) pair
    * ([[graft.expressions.PqQueryDot]] — same FLOPs as a full dot; the
    * batch win is bytes). Same zero-norm/NULL → score-0 rule as
@@ -134,22 +137,9 @@ class IvfPqIndex private (
     val idType = encoded.schema(corpusIdCol).dataType
     require(Seq(ByteType, ShortType, IntegerType, LongType).contains(idType),
       s"searchMany buffers corpus ids as long, but '$corpusIdCol' is ${idType.simpleString}")
-    val probes = IvfIndex.probesForQueries(centroids, queries, queryIdCol,
-      queryEmbCol, nprobe)
-    // residual coding completes each candidate's dot with the per-
-    // (query, cell) `q·centroid` scalar — computed ONCE on the tiny
-    // probes frame (≤ n_queries·nprobe rows), never per candidate row
-    val probesWithAddend =
-      if (!byResidual) probes.withColumn("__qc", lit(0.0))
-      else probes
-        .join(broadcast(centroids), Seq("cell"))
-        .join(broadcast(queries.select(col(queryIdCol), col(queryEmbCol))),
-          Seq(queryIdCol))
-        .select(col(queryIdCol), col("cell"),
-          vectors.dot_product(col("centroid"), col(queryEmbCol)).as("__qc"))
-    val candidates = encoded
-      .join(broadcast(probesWithAddend), Seq("cell"))
-      .join(broadcast(queries), Seq(queryIdCol))
+    val candidates = encoded.join(broadcast(IvfIndex.probedQueries(queries,
+      queryIdCol, queryEmbCol, centroidVectors, nprobe, withAddend = byResidual)),
+      Seq("cell"))
     val adc = ColumnBridge.column(graft.expressions.PqQueryDot(
       ColumnBridge.expression(col(codesCol)),
       ColumnBridge.expression(col(queryEmbCol)),
@@ -215,12 +205,13 @@ class IvfPqIndex private (
     encoded.groupBy("cell").agg(count(lit(1)).as("n"))
 
   /** The (queryId, cell) probe assignment [[searchMany]] plans at
-    * `nprobe` — the IDENTICAL [[IvfIndex.probesForQueries]] block, so
-    * costs priced from it are the costs the serving plan pays. */
+    * `nprobe` — the IDENTICAL [[IvfIndex.probedQueries]] block it
+    * broadcasts, so costs priced from it are the costs the serving plan
+    * pays. Map-side over the query table; plans no corpus scan. */
   override def probesMany(queries: DataFrame, queryIdCol: String,
       queryEmbCol: String, nprobe: Int): DataFrame =
-    IvfIndex.probesForQueries(centroids, queries, queryIdCol, queryEmbCol,
-      nprobe)
+    IvfIndex.probedQueries(queries, queryIdCol, queryEmbCol, centroidVectors,
+      nprobe).select(queryIdCol, "cell")
 
   /** Mean CODEC self-similarity of `df` under THIS tier's frozen
     * codebooks — cos(v, q(v)) over the deterministic hash-ordered
@@ -591,8 +582,9 @@ object IvfPqIndex {
   }
 
   /** Reopen a saved index. The data scan comes from the cell-partitioned
-    * layout, so probe filters prune at the file level; the PQ model
-    * reloads by name via [[PqIndex.load]]. */
+    * layout, so probe filters prune at the file level; the centroids and
+    * the PQ model ([[PqIndex.load]]) read by name, driver-side, so
+    * reopening runs no Spark job ([[ParquetArtifacts]]). */
   def load(spark: SparkSession, path: String): IvfPqIndex = {
     val json = requireSaved(spark, path)
     def field(name: String, dflt: String): String =
@@ -601,15 +593,10 @@ object IvfPqIndex {
     val normCol = field("norm_column", "emb_norm")
     // layouts written before the residual option existed are raw-coded
     val byResidual = field("by_residual", "false").toBoolean
-    // by-name reads (r12 ADVICE): a rewritten/evolved centroids file
-    // with reordered columns must fail by name, not silently misread
-    // by ordinal
-    val cents = spark.read.parquet(s"$path/centroids")
-      .select("cell", "centroid").orderBy("cell").collect()
-      .map(_.getAs[scala.collection.Seq[Float]]("centroid").toArray)
-    val model = PqIndex.load(spark, s"$path/pq")
-    new IvfPqIndex(cents, model, spark.read.parquet(s"$path/data"),
-      codesCol, normCol, byResidual)
+    new IvfPqIndex(IvfIndex.readCentroids(spark, path),
+      PqIndex.load(spark, s"$path/pq"),
+      ParquetArtifacts.cellTree(spark, s"$path/data"), codesCol, normCol,
+      byResidual)
   }
 
   /** Files-per-cell telemetry for a SAVED layout's data tree — the

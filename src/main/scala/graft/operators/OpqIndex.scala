@@ -247,13 +247,21 @@ object OpqIndex {
 
   def load(spark: SparkSession, path: String): OpqModel = {
     val pq = PqIndex.load(spark, s"$path/pq")
-    val rows = spark.read.parquet(s"$path/rotation")
-      .collect().map(r => (r.getAs[Int]("row"),
-        r.getAs[scala.collection.Seq[Float]]("vector").toArray))
+    OpqModel(readRotation(spark, s"$path/rotation", pq.dim), pq, Array.empty)
+  }
+
+  /** A saved `dim`×`dim` rotation as one row-major flat array — read
+    * driver-side and BY NAME ([[ParquetArtifacts]]), shared with
+    * [[OpqIvfPqIndex.readRotation]]. */
+  private[operators] def readRotation(spark: SparkSession, dir: String,
+      dim: Int): Array[Float] = {
+    import ParquetArtifacts.{FloatsKind, IntKind}
+    val rows = ParquetArtifacts.read(spark, dir, "row" -> IntKind, "vector" -> FloatsKind)
+      .map(r => (r(0).asInstanceOf[Int], r(1).asInstanceOf[Array[Float]]))
       .sortBy(_._1)
-    require(rows.length == pq.dim && rows.forall(_._2.length == pq.dim),
-      s"$path/rotation is not a ${pq.dim}×${pq.dim} matrix")
-    OpqModel(rows.flatMap(_._2), pq, Array.empty)
+    require(rows.length == dim && rows.forall(_._2.length == dim),
+      s"$dir is not a $dim×$dim matrix")
+    rows.flatMap(_._2).toArray
   }
 
   // ---- driver-side numeric kernels (double precision throughout) ----

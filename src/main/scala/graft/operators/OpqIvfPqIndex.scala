@@ -83,7 +83,7 @@ final class OpqIvfPqIndex private[operators] (
 
   /** Batch ANN for a TABLE of queries: the query side rotates IN-PLAN
     * (one codegen projection over the query table — small by
-    * construction), then [[IvfPqIndex.searchMany]]'s broadcast-probe /
+    * construction), then [[IvfPqIndex.searchMany]]'s map-side probe /
     * cell-join / bounded-heap plan runs unchanged. */
   override def searchMany(queries: DataFrame, queryIdCol: String,
       queryEmbCol: String, corpusIdCol: String, k: Int, nprobe: Int,
@@ -334,16 +334,9 @@ object OpqIvfPqIndex {
     val dim = IvfIndex.sidecarField(json, "dim").map(_.toInt).getOrElse(
       throw new IllegalArgumentException(
         s"$path/_opqivfpq.json carries no dim field: $json"))
-    // by-name reads (the r12 ADVICE convention): a rewritten rotation
-    // file with reordered columns must fail by name, not misread
-    val rows = spark.read.parquet(s"$path/rotation")
-      .select("row", "vector").collect()
-      .map(r => (r.getAs[Int]("row"),
-        r.getAs[scala.collection.Seq[Float]]("vector").toArray))
-      .sortBy(_._1)
-    require(rows.length == dim && rows.forall(_._2.length == dim),
-      s"$path/rotation is not a $dim×$dim matrix")
-    rows.flatMap(_._2)
+    // by-name, driver-side read (the r12 ADVICE convention): a rewritten
+    // rotation file with reordered columns must read the same
+    OpqIndex.readRotation(spark, s"$path/rotation", dim)
   }
 
   /** [[IvfPqIndex.layoutStats]] for the NESTED data tree of a saved

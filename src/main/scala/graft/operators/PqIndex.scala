@@ -355,16 +355,20 @@ object PqIndex {
   /** Reopen a saved model. All reads are BY NAME: the "any engine
     * reloads it" claim means another writer may reorder columns
     * (mergeSchema, a rewrite), and an ordinal read would silently swap
-    * `m` and `dim` into garbage codebook groupings instead of failing. */
+    * `m` and `dim` into garbage codebook groupings instead of failing.
+    * Driver-local ([[ParquetArtifacts]]): no Spark job. */
   def load(spark: SparkSession, path: String): PqModel = {
-    val meta = spark.read.parquet(s"$path/meta").head()
-    val (m, dim) = (meta.getAs[Int]("m"), meta.getAs[Int]("dim"))
-    val lossless = meta.getAs[Boolean]("lossless")
-    val rows = spark.read.parquet(s"$path/codebooks")
-      .collect().map(r => (r.getAs[Int]("subspace"), r.getAs[Int]("codeword"),
-        r.getAs[scala.collection.Seq[Float]]("vector").toArray))
+    import ParquetArtifacts.{BooleanKind, FloatsKind, IntKind}
+    val meta = ParquetArtifacts.read(spark, s"$path/meta", "m" -> IntKind,
+      "dim" -> IntKind, "lossless" -> BooleanKind).headOption.getOrElse(
+      throw new IllegalArgumentException(s"$path/meta holds no row"))
+    val (m, dim) = (meta(0).asInstanceOf[Int], meta(1).asInstanceOf[Int])
+    val lossless = meta(2).asInstanceOf[Boolean]
+    val rows = ParquetArtifacts.read(spark, s"$path/codebooks",
+      "subspace" -> IntKind, "codeword" -> IntKind, "vector" -> FloatsKind)
     val codebooks = (0 until m).map { j =>
-      rows.filter(_._1 == j).sortBy(_._2).map(_._3)
+      rows.filter(_(0) == j).sortBy(_(1).asInstanceOf[Int])
+        .map(_(2).asInstanceOf[Array[Float]]).toArray
     }.toArray
     PqModel(m, dim, codebooks, lossless)
   }

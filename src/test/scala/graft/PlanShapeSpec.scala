@@ -505,7 +505,7 @@ class PlanShapeSpec extends AnyFunSuite {
     }
   }
 
-  test("probesMany prices serving cost without touching the coded corpus: no codes in the plan, queries broadcast, bounded-heap top-nprobe") {
+  test("probesMany prices serving cost without touching the coded corpus: no codes in the plan, map-side probe kernel, no exchange") {
     import graft.operators.IvfPqIndex
     val e = Tables(spark, sf, "embeddings")
     val idx = IvfPqIndex.build(e, "embedding", nlist = 4, m = 4, k = 16)
@@ -513,15 +513,15 @@ class PlanShapeSpec extends AnyFunSuite {
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
     val p = idx.probesMany(q, "query_id", "qe", 2)
       .queryExecution.explainString(org.apache.spark.sql.execution.SimpleMode)
-    // the cost seam reads centroids (nlist local rows) and the query
-    // sample ONLY — if the coded corpus ever enters this plan, the
+    // the cost seam reads the query sample ONLY, the centroids riding
+    // the probe kernel — if the coded corpus ever enters this plan, the
     // "priced from metadata" claim is broken
     assert(!p.contains("pq_codes"),
       s"the probe-assignment plan must never touch the coded corpus:\n$p")
-    assert(p.toLowerCase.contains("partial"),
-      s"per-query top-nprobe must be the bounded-heap aggregate:\n$p")
-    assert(p.contains("BroadcastExchange") || p.contains("BroadcastNestedLoopJoin"),
-      s"the query sample must broadcast against the centroid table:\n$p")
+    assert(p.contains("probe_cells"),
+      s"per-query top-nprobe must be the map-side probe kernel:\n$p")
+    assert(!p.contains("Exchange") && !p.contains("Join"),
+      s"probe assignment is one narrow pass over the query sample:\n$p")
   }
 
   test("streaming repair gauge (batchCellCounts): map-side assignment + partial count — no window, no join, nlist rows out") {

@@ -176,4 +176,17 @@ class ShingleKernelSpec extends AnyFunSuite {
       case (k, None) => conf.unset(k)
     }
   }
+
+  test("lowerRoot equals toLowerCase(Locale.ROOT), and stays linear on a long İ-heavy text") {
+    for (t <- texts ++ fuzz) assert(ShingleHashes.lowerRoot(t) == t.toLowerCase(Locale.ROOT))
+    // 256k chars of Turkish capitals and sigma contexts: the ROOT lowering
+    // of this text is quadratic, the reference below pays it once
+    val rnd = new scala.util.Random(3)
+    val words = Array("İZMİR", "İstanbul", "ΣİΣ", "İ", "Σ", "ΟΔΟΣ İ", "iİi", "I\u0307İ")
+    val sb = new StringBuilder
+    while (sb.length < (1 << 18)) sb.append(words(rnd.nextInt(words.length))).append(' ')
+    val heavy = sb.toString
+    assert(ShingleHashes.lowerRoot(heavy) == heavy.toLowerCase(Locale.ROOT))
+    assert(ShingleHashes.hashes(u(heavy), 3, 42).toLongArray().toSeq == Ref.hashes(heavy, 3, 42))
+  }
 }
