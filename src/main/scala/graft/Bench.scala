@@ -1,56 +1,95 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.datasources.v2.V2TableWriteExec
+import org.apache.spark.sql.util.QueryExecutionListener
 object Bench {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+  /** The session every driver main (Verify, Bench, JobProbe) runs:
+    * `local[SPARK_GRAFT_CPUS]` (default 4), one shuffle partition per
+    * core, UTC, UI off.
+    *
+    * Codegen class cache (r22): the default maxEntries=100 thrashes —
+    * 214 queries generate thousands of distinct classes per pass, so
+    * every pass re-compiles (janino) what the previous one built. The
+    * same eviction hits any long-lived production driver running varied
+    * plans; the cost is bounded heap. Env-overridable for A/B.
+    *
+    * AQE post-shuffle coalescing stays at the Spark defaults
+    * (parallelismFirst=true), MEASURED not assumed (r21, guide §1):
+    * forcing advisory-byte sizing (parallelismFirst=false, 64m) was
+    * A/B'd on a 30-query subset in one box window — 130.1 s vs 106.0 s
+    * with the default. These text/codegen stages are CPU-bound at small
+    * byte sizes, so coalescing their post-shuffle partitions to one
+    * serializes real compute and loses far more than the saved
+    * near-empty-task scheduling overhead. */
+  def session(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // AQE post-shuffle coalescing stays at the Spark defaults
-    // (parallelismFirst=true), MEASURED not assumed (r21, guide §1):
-    // forcing advisory-byte sizing (parallelismFirst=false, 64m) was
-    // A/B'd on a 30-query subset in one box window — 130.1 s vs
-    // 106.0 s with the default. These text/codegen stages are
-    // CPU-bound at small byte sizes, so coalescing their post-shuffle
-    // partitions to one serializes real compute and loses far more
-    // than the saved near-empty-task scheduling overhead. The default
-    // is already the scale-adaptive mechanism (partition count follows
-    // data volume at cluster scale, parallelism at local scale).
-    // Codegen class cache (r22, guide §1.2 per-task work): the default
-    // spark.sql.codegen.cache.maxEntries=100 thrashes under this suite —
-    // 214 queries generate thousands of distinct wholestage/expression
-    // classes per pass, so every pass re-compiles (janino) classes the
-    // previous pass already built. NOT a local-only knob: the cache is
-    // per-JVM and the same eviction hits every long-lived production
-    // driver/executor running varied plans; cost is bounded heap for
-    // compiled classes. Env-overridable for A/B and for memory-tight
-    // deployments.
-    val codegenCache = sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.codegen.cache.maxEntries", codegenCache)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.codegen.cache.maxEntries",
+        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** Warm the JVM/codegen/parquet paths once so the first timed query
+    * isn't charged several seconds of one-time startup cost, and — only
+    * when an ann_ivf_* query is among `names` — pre-build the memoized
+    * IVF index so those entries time the recurring probe path, not the
+    * one-time build (Bench's `method` records it: those numbers are not
+    * comparable with a build+query timing). Returns whether it did. */
+  def warm(spark: SparkSession, sfDir: String, names: Iterable[String]): Boolean = {
+    try SparkEntry.entry(spark).count()
+    catch { case e: Throwable => System.err.println(s"[bench] warmup failed: $e") }
+    val text = names.exists(_.startsWith("ann_ivf"))
+    val image = names.exists(_ == "multimodal_image_query_ivf")
+    if (text || image)
+      try SparkEntry.warm(spark, sfDir, text = text, image = image)
+      catch { case e: Throwable => System.err.println(s"[bench] IVF warm failed: $e") }
+    text || image
+  }
+
+  /** Builds `df` and writes it to Spark's noop sink: every output column
+    * is evaluated and nothing is kept — the work a consumer of the
+    * frame receives. `count()` is not that work: Catalyst prunes every
+    * column it does not need, and with them the operators that compute
+    * them. `df` is by name, so the seconds include its construction
+    * (any eager fit, guard or collect it runs while building its plan).
+    * Returns those seconds and the query execution of the write itself,
+    * whose executed plan is the one that ran (adaptive plans final). */
+  def materialize(df: => DataFrame): (Double, QueryExecution) = {
+    val written = scala.concurrent.Promise[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.executedPlan.isInstanceOf[V2TableWriteExec]) written.trySuccess(qe)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val t0 = System.nanoTime()
+    val frame = df
+    frame.sparkSession.listenerManager.register(listener)
+    try {
+      frame.write.format("noop").mode("overwrite").save()
+      val seconds = (System.nanoTime() - t0) / 1e9
+      // listener events arrive on Spark's listener bus, after the write returns
+      import scala.concurrent.duration._
+      (seconds, scala.concurrent.Await.result(written.future, 60.seconds))
+    } finally frame.sparkSession.listenerManager.unregister(listener)
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = session()
     // SPARK_GRAFT_ONLY=name1,name2 restricts the run — for iterating on
     // one query's plan without paying for the whole suite
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val selected = only.map(o => SparkEntry.queries.filter(kv => o(kv._1)))
       .getOrElse(SparkEntry.queries)
-    // Warm the JVM/codegen/parquet paths once so the first timed query
-    // isn't charged several seconds of one-time startup cost, and —
-    // only when an ann_ivf_* query is selected — pre-build the memoized
-    // IVF index so those entries time the recurring probe path, not the
-    // one-time build (methodology recorded in the output JSON; numbers
-    // are not comparable with a build+query timing).
-    try SparkEntry.entry(spark).count()
-    catch { case e: Throwable => System.err.println(s"[bench] warmup failed: $e") }
-    val warmText = selected.keys.exists(_.startsWith("ann_ivf"))
-    val warmImage = selected.contains("multimodal_image_query_ivf")
-    val warmIvf = warmText || warmImage
-    if (warmIvf)
-      try SparkEntry.warm(spark, sfDir, text = warmText, image = warmImage)
-      catch { case e: Throwable => System.err.println(s"[bench] IVF warm failed: $e") }
+    val warmIvf = warm(spark, sfDir, selected.keys)
     // Min over 3 INTERLEAVED full-suite passes. This box exhibits
     // minute-scale "slow windows" (scheduler/IO stalls that are not
     // our CPU load: two back-to-back full runs of the same binary put
@@ -71,11 +110,8 @@ object Bench {
     // soft-referenced caches (Spark's whole-stage-codegen class cache
     // among them), which measurably SLOWS and destabilizes every
     // subsequent sample rather than quieting it.
-    def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => return -1.0 }
-      (System.nanoTime() - t0) / 1e9
-    }
+    def once(fn: (SparkSession, String) => DataFrame): Double =
+      try materialize(fn(spark, sfDir))._1 catch { case _: Throwable => -1.0 }
     // Golden-anchor queries (*_anchor, *_drops) prove correctness, not
     // latency — they re-run expensive pinned fits (the KMeans anchor
     // alone cost ~14s of bench wall in r8) on paths whose production
@@ -132,6 +168,7 @@ object Bench {
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val method = (if (warmIvf) "ann_ivf_* timed post-warm (probe path only; index build memoized)"
       else "no IVF pre-build") +
+      "; each sample builds the query and writes it to the noop sink" +
       s"; 1 untimed warm pass then per-query min over $passes interleaved timed passes" +
       "; golden-anchor queries (*_anchor, *_drops) excluded from timing" +
       (if (calibRuns > 0)
@@ -143,8 +180,7 @@ object Bench {
     // stdout chars cannot hold it (the r10/r11 truncation): persist the
     // complete JSON to a repo file as well, and make the FINAL stdout
     // line a compact, fully-parseable summary that fits a 2000-char
-    // tail with room for the sbt epilogue — top-20 slowest queries
-    // inline (the plan-audit set), the rest in the file.
+    // tail with room for the sbt epilogue — the slowest queries inline.
     println(fullJson)
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_FULL.json")
     // Track the write outcome: a failed write must not leave the

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 
 /**
@@ -9,27 +8,19 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
  * time goes before touching anything). For each named query: one warm
  * run, then one timed run with a listener recording every Spark job's
  * duration, task count, and job group/description, printed slowest
- * first. Not part of the driver contract; a diagnostic main only.
+ * first. Both runs build the query and write it to the noop sink
+ * ([[Bench.materialize]]), as Bench times it. Not part of the driver
+ * contract; a diagnostic main only.
  *
- * Run: SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=32 \
+ * Run: SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=4 \
  *   sbt "runMain graft.JobProbe query1,query2"
  */
 object JobProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val names = args.headOption.map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(Seq("pipeline_pretrain_semdedup_stream"))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // match Bench's codegen-cache sizing so probe numbers reflect
-      // bench state (r22)
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session()
 
     final case class JobRec(id: Int, desc: String, start: Long,
       var end: Long = -1L, var tasks: Int = 0, var stages: Int = 0)
@@ -40,8 +31,6 @@ object JobProbe {
     val stageToJob = new java.util.concurrent.ConcurrentHashMap[Int, Integer]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
-        // description when set, else the short callsite — names the
-        // OPERATOR a job belongs to when queries set no description
         val p = Option(e.properties)
         // description when set; else the RDD scope name (the physical
         // operator that spawned the job — AQE stage materializations
@@ -78,42 +67,30 @@ object JobProbe {
         Thread.sleep(20)
     }
 
-    // same warmups as Bench so measured state matches bench state
-    try SparkEntry.entry(spark).count()
-    catch { case e: Throwable => System.err.println(s"[probe] warmup failed: $e") }
-    if (names.exists(_.startsWith("ann_ivf")))
-      try SparkEntry.warm(spark, sfDir, text = true,
-        image = names.contains("multimodal_image_query_ivf"))
-      catch { case e: Throwable => System.err.println(s"[probe] IVF warm failed: $e") }
+    // Bench's warm-up, so measured state matches bench state
+    Bench.warm(spark, sfDir, names)
 
     // SPARK_GRAFT_PLAN_DIR=dir: also write <dir>/<query><suffix>.txt with the
-    // final explain("formatted") output (suffix from SPARK_GRAFT_PLAN_SUFFIX,
-    // default "_before") — the plans/r21 artifact the judge reads
+    // explain("formatted") output of the timed run's write (suffix from
+    // SPARK_GRAFT_PLAN_SUFFIX, default "_before") — the plan that ran
     val planDir = sys.env.get("SPARK_GRAFT_PLAN_DIR")
     val planSuffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "_before")
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
       // warm run (codegen/JIT) — not recorded
-      try {
-        val df = fn(spark, sfDir)
-        df.count()
-        planDir.foreach { dir =>
-          val plan = df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
-          java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-          java.nio.file.Files.writeString(
-            java.nio.file.Paths.get(dir, s"$name$planSuffix.txt"), plan)
-        }
-      }
+      try Bench.materialize(fn(spark, sfDir))
       catch { case e: Throwable => System.err.println(s"[probe] $name warm failed: $e") }
       jobs.clear(); stageToJob.clear()
-      val t0 = System.nanoTime()
-      val n = fn(spark, sfDir).count()
-      val total = (System.nanoTime() - t0) / 1e9
+      val (total, qe) = Bench.materialize(fn(spark, sfDir))
       drainBus()
+      planDir.foreach { dir =>
+        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+        java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, s"$name$planSuffix.txt"),
+          qe.explainString(org.apache.spark.sql.execution.FormattedMode))
+      }
       val recs = jobs.values().toArray(Array.empty[JobRec]).sortBy(_.id)
       val jobSum = recs.map(r => math.max(0L, r.end - r.start)).sum / 1e3
-      println(f"%n===== $name: total $total%.3f s, rows $n, jobs ${recs.length}, job-time sum $jobSum%.3f s =====")
+      println(f"%n===== $name: total $total%.3f s, jobs ${recs.length}, job-time sum $jobSum%.3f s =====")
       recs.sortBy(r => -(r.end - r.start)).take(30).foreach { r =>
         println(f"  job ${r.id}%4d  ${(r.end - r.start) / 1e3}%8.3f s  stages=${r.stages}%3d tasks=${r.tasks}%5d  ${r.desc.take(110)}")
       }

@@ -497,8 +497,9 @@ object SparkEntry {
     // stores slice(embedding, 1, 16) definitionally — the same floats
     // the in-plan row slices — so the result is provably identical and
     // the row shares nearest_matryoshka's oracle. The bytes-read cut
-    // at rest is ScaleProbe `matryoshka`'s; the stage-1 pruned-scan
-    // shape is PlanShapeSpec-pinned.
+    // at rest was measured at r16 by the removed ScaleProbe `matryoshka`
+    // mode (`git show e105133:src/main/scala/graft/ScaleProbe.scala`);
+    // the stage-1 pruned-scan shape is PlanShapeSpec-pinned.
     "nearest_matryoshka_prefix" -> ((s, d) => {
       val e = Tables(s, d, "embeddings")
       val q = e.where(col("vec_id") === 0).select("embedding")
@@ -628,7 +629,8 @@ object SparkEntry {
     // bit-for-bit ann_pq_exact, sharing nearest_cosine's oracle. The
     // LEARNED rotation cannot share a float oracle (float32 R perturbs
     // the 6th decimal); its recall-beats-PQ claim is OpqIndexSpec's
-    // (measured) and ScaleProbe `opq`'s at 1M.
+    // (measured), and was measured at 1M at r16 by the removed
+    // ScaleProbe `opq` mode (`git show e105133:src/main/scala/graft/ScaleProbe.scala`).
     "ann_opq_exact" -> ((s, d) => {
       val e = Tables(s, d, "embeddings")
       val dim = e.where(col("embedding").isNotNull)
@@ -707,7 +709,9 @@ object SparkEntry {
     // real 16-cell quantizer, Lloyd codebooks fit on the residual
     // stream, nprobe = 4. Rows-only (k-means cells + Lloyd residual
     // codebooks have no SQL analog); its exactness anchor is the row
-    // above, its recall-vs-raw story IvfPqIndexSpec + ScaleProbe.
+    // above, its recall-vs-raw story IvfPqIndexSpec + the removed
+    // ScaleProbe `ivfpqresidual` mode, measured at r16
+    // (`git show e105133:src/main/scala/graft/ScaleProbe.scala`).
     "ann_ivfpq_residual" -> ((s, d) => {
       val idx = ivfPqResidualFor(s, d)
       val q = Tables(s, d, "embeddings").where(col("vec_id") === 0)
@@ -997,8 +1001,10 @@ object SparkEntry {
     // published recipe (Abbas et al. 2023): cluster embeddings (the
     // frozen 8-cell IVF quantizer the ANN tier already serves from),
     // prune near-dups only WITHIN clusters. Candidates cap at
-    // Σ n_c²/2 instead of n²/2 — the nlist× cut ScaleProbe `semdedup`
-    // measures. k-means cells have no SQL analog, so the row is
+    // Σ n_c²/2 instead of n²/2 — the nlist× cut measured at r14 by the
+    // removed ScaleProbe `semdedup` mode
+    // (`git show e105133:src/main/scala/graft/ScaleProbe.scala`).
+    // k-means cells have no SQL analog, so the row is
     // rows-only; its oracled twin is semdedup_exact, and the
     // never-over-deletes superset contract (pairs ⊆ exact pairs ⇒
     // survivors ⊇ exact survivors) is DedupSimJoinSpec's.
@@ -1028,8 +1034,9 @@ object SparkEntry {
     // shape — per-cell cosine-to-own-centroid over the frozen 8-cell
     // quantizer, O(n) scores + an nlist-bounded min-id table instead
     // of Σ n_c²/2 candidate pairs (the scale-saver where cells run
-    // hot — ScaleProbe `semdedupcentroid` measures the cut). Rows-only
-    // (k-means cells); oracled twin above.
+    // hot — the cut was measured at r15 by the removed ScaleProbe
+    // `semdedupcentroid` mode, `git show e105133:src/main/scala/graft/ScaleProbe.scala`).
+    // Rows-only (k-means cells); oracled twin above.
     "semdedup_centroid" -> ((s, d) => {
       val emb = Tables(s, d, "embeddings")
       Dedup.semanticDedupByCentroid(emb, ivfFor(s, d, nlist = 8), "vec_id", eps = 0.7)
@@ -1065,8 +1072,9 @@ object SparkEntry {
     // the within-cell pairing provably sees every global pair: the
     // transitive-closure oracle shared with semdedup_exact verbatim.
     // Proves the multi-assign explode + pair-dedup machinery end to
-    // end; recall-vs-cost at nprobe ∈ {1, 2} is ScaleProbe
-    // `semdedupnprobe`'s.
+    // end; recall-vs-cost at nprobe ∈ {1, 2} was measured at r15 by the
+    // removed ScaleProbe `semdedupnprobe` mode
+    // (`git show e105133:src/main/scala/graft/ScaleProbe.scala`).
     "semdedup_nprobe_exact" -> ((s, d) => {
       val emb = Tables(s, d, "embeddings")
       val dim = emb.where(col("embedding").isNotNull)
@@ -1165,8 +1173,9 @@ object SparkEntry {
     // same ascending-dimension double dot as the exact kernel —
     // decisions provably identical, the oracle shared verbatim. This
     // is the row that proves the coded path's arithmetic, not just
-    // its plumbing; the lossy-model agreement is ScaleProbe
-    // `semdedupstore`'s.
+    // its plumbing; the lossy-model agreement was measured at r15 by the
+    // removed ScaleProbe `semdedupstore` mode
+    // (`git show e105133:src/main/scala/graft/ScaleProbe.scala`).
     "semdedup_stream_coded" -> ((s, d) => {
       val emb = Tables(s, d, "embeddings")
       val dim = emb.where(col("embedding").isNotNull)
@@ -2073,8 +2082,9 @@ object SparkEntry {
     // stack at nprobe ∈ {1, 2, 4, 8, 16} — the row an operator
     // actually reads to size the knob; the 1.0 anchor above pins the
     // machinery, the lossless-curve monotonicity (and the honest
-    // lossy-dip caveat) is spec'd, and ScaleProbe mmrindex measures
-    // the same codec's shortlist membership at 1M.
+    // lossy-dip caveat) is spec'd, and the same codec's shortlist
+    // membership at 1M was measured at r18 by the removed ScaleProbe
+    // `mmrindex` mode (`git show e105133:src/main/scala/graft/ScaleProbe.scala`).
     "ann_recall_curve_opq" -> ((s, d) => {
       val idx = opqIvfPqFor(s, d)
       val e = Tables(s, d, "embeddings")
@@ -3145,8 +3155,9 @@ object SparkEntry {
     // — the dsir_score_hashed precedent); its exact twin is
     // quality_classifier_frozen, whose oracle the numBuckets = 0
     // degenerate shares bit for bit (ClassifierSpec pins the
-    // degenerate identity; ScaleProbe `clfbuckets` measures the
-    // collision trade at a web-scale vocab).
+    // degenerate identity; the collision trade at a web-scale vocab was
+    // measured at r16 by the removed ScaleProbe `clfbuckets` mode,
+    // `git show e105133:src/main/scala/graft/ScaleProbe.scala`).
     "quality_classifier_hashed" -> ((s, d) => {
       val docs = Tables(s, d, "documents")
       val model = classifierHashedFor(s, d)

@@ -92,8 +92,8 @@ case class NearestCells(child: Expression, centroids: Array[Float], dim: Int,
   * +0.0), ties to the lower cell id. Cosine is
   * `vectors.cosine_similarity(centroid, query)` exactly (double
   * accumulation over the common prefix, zero norm scores 0.0), and a
-  * NULL query scores 0.0 against every cell (the reference's
-  * NULL-scores-0 rule), so it probes cells `0 until nprobe`. A table of
+  * NULL query probes no cells, as NULL vectors are excluded from the
+  * index itself (`IvfIndex.build`). A table of
   * queries probes with no join, no shuffle and no aggregate: the
   * centroid table rides the generated code, as in [[NearestCell]].
   * Single-query `search` calls the same kernel driver-side
@@ -245,14 +245,15 @@ object NearestCell {
 
   /** [[ProbeCells]]' kernel, callable from generated Java: the
     * `min(nprobe, nlist)` cells of highest cosine against `q` (read as
-    * float or double; NULL scores 0.0 everywhere), best first, in
+    * float or double; NULL probes nothing), best first, in
     * Spark's `desc` total order with ties to the lower cell. Cells scan
     * in ascending id and an entry moves ahead only of strictly worse
     * ones, so equal scores keep ascending cell order. */
   def probeTop(q: ArrayData, isFloat: Boolean, centroids: Array[Float], dim: Int,
       nprobe: Int): Array[Int] = {
+    if (q == null) return Array.emptyIntArray
     val nlist = centroids.length / dim
-    val n = if (q == null) 0 else math.min(q.numElements(), dim)
+    val n = math.min(q.numElements(), dim)
     val k = math.max(0, math.min(nprobe, nlist))
     val scores = new Array[Double](k)
     val cells = new Array[Int](k)

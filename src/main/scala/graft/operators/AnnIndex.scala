@@ -141,8 +141,8 @@ trait AnnIndex extends Serializable {
     * plan runs (any pretransform applied inside, like `searchMany`),
     * so costs priced from this metadata are the costs paid at serve
     * time. nQ·nprobe rows, one per (query row, cell), assigned map-side;
-    * never corpus-scale. Rows with a NULL query id probe nothing, as
-    * `searchMany` serves them nothing. */
+    * never corpus-scale. Rows with a NULL query id or a NULL query
+    * vector probe nothing, as `searchMany` serves them nothing. */
   def probesMany(queries: DataFrame, queryIdCol: String,
       queryEmbCol: String, nprobe: Int): DataFrame
 }
@@ -183,7 +183,9 @@ object AnnIndex {
     * ground-truth pass is an exact k-NN join — O(nQ · corpus) score
     * evaluations, exactly the scan the index exists to avoid — so the
     * sample buys the curve and the curve sizes the knob for every
-    * query after (ScaleProbe measures the opqivfpq curve at 1M). That
+    * query after (the opqivfpq curve was measured at 1M at r17 by the
+    * removed ScaleProbe `opqivfpq` mode,
+    * `git show e105133:src/main/scala/graft/ScaleProbe.scala`). That
     * contract is ENFORCED, not advisory (r19 VERDICT #6): more than
     * `maxQueries` query rows refuses by name — feeding the corpus as
     * its own query set would silently turn tuning into the O(n²)

@@ -154,7 +154,8 @@ object Classifier {
    * triggers on a hashed model. `minCount` then bounds BUCKET
    * occurrences (a bucket is in-vocab if the tokens hashing into it
    * total ≥ minCount); colliding tokens share one weight — the
-   * documented fastText trade, measured by ScaleProbe `clfbuckets`.
+   * documented fastText trade, measured at r16 by the removed ScaleProbe
+   * `clfbuckets` mode, `git show e105133:src/main/scala/graft/ScaleProbe.scala`.
    * `numBuckets = 0` (default) is the exact surface-token degenerate:
    * bit-for-bit the pre-knob fit, sharing `quality_classifier_frozen`'s
    * DuckDB derivation oracle.
@@ -253,9 +254,11 @@ object Classifier {
       // window's hash-by-__id partitioning, the broadcast join keeps
       // it, and the per-doc aggregation is satisfied by it — so the
       // scoring pass touches feat with ZERO exchanges (r13 VERDICT
-      // #4; ScaleProbe `classifier` measures the cut). The bias enters
-      // as max(__b_micro) — every joined row carries the same value,
-      // identical to the old lit(bMicro).
+      // #4; the cut was measured at r13 by the removed ScaleProbe
+      // `classifier` mode,
+      // `git show e105133:src/main/scala/graft/ScaleProbe.scala`). The
+      // bias enters as max(__b_micro) — every joined row carries the
+      // same value, identical to the old lit(bMicro).
       val z = feat.join(if (useBroadcast) broadcast(w) else w, "__tok")
         .withColumn("__zq", round(col("__x") * col("__w_micro")).cast("long"))
         .groupBy("__id", "__y")

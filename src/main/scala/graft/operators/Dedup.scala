@@ -511,23 +511,7 @@ object Dedup {
    */
   def prefixJaccardPairs(df: DataFrame, textCol: String, idCol: String,
       threshold: Double, shingleSize: Int = 1,
-      groupCol: Option[String] = None): DataFrame =
-    prefixJaccardStaged(df, textCol, idCol, threshold, shingleSize, groupCol)._2
-
-  /** Diagnostic twin of [[prefixJaccardPairs]]: the candidate pairs the
-    * prefix inverted index emits BEFORE exact verification. The ratio
-    * candidates / true pairs is the sub-quadratic claim made measurable
-    * — ScaleProbe reports it at 1M docs. Not part of the query surface. */
-  def prefixJaccardCandidates(df: DataFrame, textCol: String, idCol: String,
-      threshold: Double, shingleSize: Int = 1,
-      groupCol: Option[String] = None): DataFrame =
-    prefixStage(df, textCol, idCol, threshold, shingleSize, groupCol)._2
-
-  /** (candidates, verified pairs) sharing ONE candidate stage — the
-    * probe path counts both without tokenizing/indexing twice. */
-  private[graft] def prefixJaccardStaged(df: DataFrame, textCol: String,
-      idCol: String, threshold: Double, shingleSize: Int = 1,
-      groupCol: Option[String] = None): (DataFrame, DataFrame) = {
+      groupCol: Option[String] = None): DataFrame = {
     val (sets, cands) = prefixStage(df, textCol, idCol, threshold, shingleSize, groupCol)
     // exact verification — the same integer cross-multiplied threshold
     // as jaccardPairs, on candidates only, over long-id sets
@@ -538,14 +522,13 @@ object Dedup {
       col("__n").as("__n2"))
     val inter = size(array_intersect(col("__s1"), col("__s2"))).cast("long")
     val unionSz = (col("__n1") + col("__n2")).cast("long") - inter
-    val verified = cands.join(s1, Seq("id1")).join(s2, Seq("id2"))
+    cands.join(s1, Seq("id1")).join(s2, Seq("id2"))
       .where(inter * lit(q) >= unionSz * lit(p) && unionSz > 0)
       .withColumn("similarity", inter.cast("double") / unionSz.cast("double"))
       .select(col("id1"), col("id2"), col("similarity"))
-    (cands, verified)
   }
 
-  /** Shared candidate-generation stage: (sets, candidates). */
+  /** [[prefixJaccardPairs]]' candidate-generation stage: (sets, candidates). */
   private def prefixStage(df: DataFrame, textCol: String, idCol: String,
       threshold: Double, shingleSize: Int,
       groupCol: Option[String]): (DataFrame, DataFrame) = {
@@ -1190,9 +1173,11 @@ object Dedup {
     * blocked on `cell`. Versus the pairwise-global [[embeddingPairs]]
     * (which at corpus scale is n²/2 candidates, or LSH-pruned with
     * tuned knobs), the cell blocking caps candidates at Σ n_c²/2 —
-    * nlist× under all-pairs for balanced cells (measured in ScaleProbe
-    * `semdedup`, including the zipf-skewed case where `capCells`
-    * repairs the hot cell first).
+    * nlist× under all-pairs for balanced cells (measured at r14 by the
+    * removed ScaleProbe `semdedup` mode,
+    * `git show e105133:src/main/scala/graft/ScaleProbe.scala`,
+    * including the zipf-skewed case where `capCells` repairs the hot
+    * cell first).
     *
     * Pair semantics match [[embeddingPairs]] RESTRICTED to same-cell
     * pairs: at `nlist = 1` the composition provably degenerates to the
@@ -1276,8 +1261,9 @@ object Dedup {
     * cells ([[graft.expressions.NearestCells]], map-side like the
     * single assignment), so a pair split by a cell boundary is
     * recovered whenever the two rows share any of their nprobe cells.
-    * Candidates grow ≤ nprobe²× per cell-pair overlap (measured in
-    * ScaleProbe `semdedupnprobe` against planted boundary pairs);
+    * Candidates grow ≤ nprobe²× per cell-pair overlap (measured at r15
+    * against planted boundary pairs by the removed ScaleProbe
+    * `semdedupnprobe` mode, `git show e105133:src/main/scala/graft/ScaleProbe.scala`);
     * `nprobe = 1` is provably the single-assignment operator (spec'd).
     * Pairs found in several shared cells dedup to one row. */
   def semanticPairsMulti(df: DataFrame, centroidVectors: Array[Array[Float]],
@@ -1367,7 +1353,9 @@ object Dedup {
     * at most totalGrams / hotGramCap distinct grams qualify.
     * Decisions are identical on both paths (same winner rule); the
     * three dupGrams consumers share one ReusedExchange of the gram
-    * aggregation. ScaleProbe `substrhot` measures the balance. */
+    * aggregation. The balance was measured at r15 by the removed
+    * ScaleProbe `substrhot` mode,
+    * `git show e105133:src/main/scala/graft/ScaleProbe.scala`. */
   private def markBatchNonWinners(grams: DataFrame, hotGramCap: Long): DataFrame = {
     val dupGrams = grams.groupBy("__gh")
       .agg(count(lit(1)).as("__c"), min(struct(col("__did"), col("__pos"))).as("__w"))
@@ -1653,10 +1641,12 @@ object Dedup {
     * RETAINS a row the full store would have dropped, and a wrongly
     * retained survivor can only cause extra FUTURE drops (it screens
     * later batches) — never resurrect a dropped one. So the drained
-    * output is a SUBSET-leaning approximation whose agreement
-    * ScaleProbe `semdedupstore` measures at ≥1M rows. Store rows with
-    * BOTH halves null never match (nullIntolerant kernels) — there
-    * are none by construction ([[graft.streaming.StreamOps.semanticDedupPerBatchBounded]]
+    * output is a SUBSET-leaning approximation whose agreement was
+    * measured at ≥1M rows at r15 by the removed ScaleProbe
+    * `semdedupstore` mode,
+    * `git show e105133:src/main/scala/graft/ScaleProbe.scala`. Store
+    * rows with BOTH halves null never match (nullIntolerant kernels) —
+    * there are none by construction ([[graft.streaming.StreamOps.semanticDedupPerBatchBounded]]
     * writes exactly one half). */
   def semanticBoundedSurvivors(freshDf: DataFrame,
       centroidVectors: Array[Array[Float]], store: DataFrame,

@@ -247,9 +247,10 @@ class IvfIndex private (
    * exactness at nprobe = nlist is preserved because the cells still
    * tile the corpus (spec'd). This is the repair `driftGuard` points
    * at when a zipf-drifted append concentrates probes in hot cells
-   * (measured in ScaleProbe `ivfskew`): probe cost returns to
-   * ≈ nprobe/nlist of the corpus without refitting the whole
-   * quantizer or rewriting cold cells.
+   * (measured at r13 by the removed ScaleProbe `ivfskew` mode,
+   * `git show e105133:src/main/scala/graft/ScaleProbe.scala`): probe
+   * cost returns to ≈ nprobe/nlist of the corpus without refitting the
+   * whole quantizer or rewriting cold cells.
    *
    * One k-means pass does not PROMISE the cap (k-means balances by
    * geometry, not by count — a cell of near-identical vectors cannot
@@ -560,9 +561,9 @@ object IvfIndex {
     * CONSTRUCTION the cost the serving plan pays. nQ·nprobe rows —
     * never corpus-scale; the broadcast carries each query vector once
     * per probed cell. Each query row probes by its own vector: duplicate
-    * ids probe separately. A NULL query vector scores 0.0 against every
-    * cell, so it probes cells `0 until nprobe` and its candidates score
-    * 0.0 (the NULL-scores-0 rule); rows with a NULL id serve nothing. */
+    * ids probe separately. A NULL query vector probes no cell, as NULL
+    * vectors are excluded from [[build]]; rows with a NULL id or a NULL
+    * vector serve nothing. */
   private[operators] def probedQueries(queries: DataFrame, queryIdCol: String,
       queryEmbCol: String, centroidVectors: Array[Array[Float]], nprobe: Int,
       withAddend: Boolean = false): DataFrame = {
@@ -1045,11 +1046,12 @@ object IvfIndex {
     * `driftGuard`: if the fullest cell holds more than `maxFactor` × the
     * average, probe cost is no longer ≈ nprobe/nlist of the corpus (a
     * zipf-drifted append concentrates the scan in hot cells — measured
-    * in ScaleProbe) and the quantizer should be re-fit (`remedy`) or
-    * its hot cells split. Throws naming the tier (`label`) and up to
-    * five hot cells; returns the max/avg factor when healthy. Cells
-    * with NO rows count toward the average (an empty cell is exactly
-    * what drift looks like). */
+    * at r13 by the removed ScaleProbe `ivfskew` mode,
+    * `git show e105133:src/main/scala/graft/ScaleProbe.scala`) and the
+    * quantizer should be re-fit (`remedy`) or its hot cells split.
+    * Throws naming the tier (`label`) and up to five hot cells; returns
+    * the max/avg factor when healthy. Cells with NO rows count toward
+    * the average (an empty cell is exactly what drift looks like). */
   private[operators] def imbalanceGuard(cellSizeStats: DataFrame, nlist: Int,
       maxFactor: Double, label: String, remedy: String): Double = {
     require(maxFactor > 1.0, s"maxFactor must exceed 1, got $maxFactor")

@@ -23,11 +23,13 @@ import org.apache.spark.sql.functions._
  *   PQ(x − centroid(cell)) — the paper's §IV.A default. Residuals
  *   cluster far tighter than raw vectors (every cell's mass centers at
  *   the origin), so at equal m the codebooks spend their k codewords
- *   on a smaller ball — the recall lever (ScaleProbe `ivfpqresidual`
- *   measures residual ≥ raw recall at equal m on the clustered
- *   fixture). Scoring needs no per-cell code tables: codebooks are
- *   pooled across cells (the FAISS layout), so one m·k ADC table per
- *   query still serves every probed cell — the residual identity
+ *   on a smaller ball — the recall lever (residual ≥ raw recall at
+ *   equal m on the clustered fixture, measured at r16 by the removed
+ *   ScaleProbe `ivfpqresidual` mode,
+ *   `git show e105133:src/main/scala/graft/ScaleProbe.scala`). Scoring
+ *   needs no per-cell code tables: codebooks are pooled across cells
+ *   (the FAISS layout), so one m·k ADC table per query still serves
+ *   every probed cell — the residual identity
  *   q·x = q·centroid(cell) + q·(x − centroid) just adds one per-CELL
  *   scalar (≤ nprobe driver dots, broadcast on the cell key). The
  *   stored norm stays ‖x‖ (raw), so the cosine contract is unchanged.
@@ -491,8 +493,8 @@ object IvfPqIndex {
       // recompute). That is the deliberate trade for an IN-MEMORY
       // build handle: the durable shape is save()/load() (or
       // Dataset.checkpoint to a reliable dir), which this class
-      // provides and production serving uses; prefixJaccardStaged
-      // documents the same fail-LOUDLY-vs-recompute-WRONG choice.
+      // provides and production serving uses; Dedup.prefixJaccardPairs'
+      // candidate stage documents the same fail-LOUDLY-vs-recompute-WRONG choice.
       encodeAssigned(ivf.indexed, embCol, ivf.centroidVectors, model,
         codesCol, normCol, byResidual).localCheckpoint(false),
       codesCol, normCol, byResidual)

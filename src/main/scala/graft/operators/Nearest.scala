@@ -157,7 +157,9 @@ object Nearest {
 
   /**
    * [[twoStageTopK]] over a MATERIALIZED prefix column — the 100 TB
-   * serving shape (r16 VERDICT #2): ScaleProbe measured that slicing
+   * serving shape (r16 VERDICT #2): measured at r16 by the removed
+   * ScaleProbe `matryoshka` mode,
+   * `git show e105133:src/main/scala/graft/ScaleProbe.scala`, slicing
    * in-plan does NOT cut stage-1 cost (the full vector's bytes still
    * stream through the scan); the bytes win needs the prefix AT REST
    * as its own column ([[materializePrefix]]). Two-scan shape:

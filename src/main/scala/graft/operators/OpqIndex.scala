@@ -209,9 +209,10 @@ object OpqIndex {
 
   /** Per-row codec quality under the rotation —
     * [[PqIndex.selfSimilarity]] over the rotated column: cos(Rx,
-    * q(Rx)), exactly what ADC serving compares against. The number
-    * ScaleProbe `opq` reports corpus-wide (OPQ mean 0.97388 vs plain
-    * PQ 0.94910 at 1M correlated rows, equal m/k). */
+    * q(Rx)), exactly what ADC serving compares against. Measured
+    * corpus-wide at r16 by the removed ScaleProbe `opq` mode (OPQ mean
+    * 0.97388 vs plain PQ 0.94910 at 1M correlated rows, equal m/k;
+    * `git show e105133:src/main/scala/graft/ScaleProbe.scala`). */
   def selfSimilarity(df: DataFrame, embCol: String, model: OpqModel,
       simCol: String = "self_sim"): DataFrame = {
     require(!df.columns.contains("__opq_rot"),

@@ -322,7 +322,8 @@ object PqIndex {
     * any screen threshold a coded comparison serves (the bounded
     * SemDeDup store, IVFADC shortlists) should keep its margin above
     * `1 − min(selfSim)` — below that the quantization band can flip
-    * decisions (ScaleProbe `semdedupstore` measures it at 1M rows).
+    * decisions (measured at 1M rows at r15 by the removed ScaleProbe
+    * `semdedupstore` mode, `git show e105133:src/main/scala/graft/ScaleProbe.scala`).
     * One encode + one codegen dot per row; NULL vectors are absent
     * (encode's contract). */
   def selfSimilarity(df: DataFrame, embCol: String, model: PqModel,

@@ -15,9 +15,10 @@ import org.apache.spark.sql.functions._
  * Result-equivalent to a plain inner equi-join (spec'd; the skew_join
  * entry oracles it row-for-row against DuckDB).
  *
- * When to reach for it (measured by `ScaleProbe … skew`, 4M rows with
- * a 30%-hot key, small side beyond broadcast reach: plain SMJ 2.3s,
- * salted 1.7s, AQE skew-split 0.9s):
+ * When to reach for it (measured at r8 by the removed ScaleProbe `skew`
+ * mode, `git show e105133:src/main/scala/graft/ScaleProbe.scala`: 4M
+ * rows with a 30%-hot key, small side beyond broadcast reach: plain SMJ
+ * 2.3s, salted 1.7s, AQE skew-split 0.9s):
  *  - if the small side BROADCASTS, the big side never shuffles and
  *    skew cannot hurt — don't salt (PlanShapeSpec pins that salting
  *    keeps the broadcast);

@@ -514,10 +514,12 @@ object TextAnalysis {
    * shape AQE upgrades on its own: the counts side's runtime stats are
    * read at its shuffle, BEFORE the aggregation collapses ~n_tokens
    * map-combined rows to one per distinct token, so the planner never
-   * sees how small the model really is (measured at 100M tokens by
-   * `ScaleProbe ... lmscore`). When the caller KNOWS the vocabulary is
-   * bounded — tokenizer-normalized text, code identifiers, any closed
-   * token set — pass `broadcastCounts = true`: the token stream then
+   * sees how small the model really is (measured at 100M tokens at r9
+   * by the removed ScaleProbe `lmscore` mode,
+   * `git show e105133:src/main/scala/graft/ScaleProbe.scala`). When
+   * the caller KNOWS the vocabulary is bounded — tokenizer-normalized
+   * text, code identifiers, any closed token set — pass
+   * `broadcastCounts = true`: the token stream then
    * never shuffles at all, and the per-doc partial sums collapse to
    * one row per doc BEFORE the doc shuffle because docs stay
    * co-partitioned through a broadcast join (a token-key shuffle

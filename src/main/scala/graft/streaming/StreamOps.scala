@@ -298,10 +298,12 @@ object StreamOps {
     * with the REOPENED, widened index, so the next batch's assignment
     * matches the repaired quantizer. A zipf-drifted stream thus
     * self-heals instead of accumulating the hot-cell scan tax until an
-    * operator runs the batch repair by hand (ScaleProbe `ivfskew`
-    * measures exactly that tax). The check is BATCH-proportional: a
-    * resident per-cell occupancy map (nlist-bounded, the centroid
-    * array's own bound) initializes from ONE layout count at stream
+    * operator runs the batch repair by hand (that tax was measured at
+    * r13 by the removed ScaleProbe `ivfskew` mode,
+    * `git show e105133:src/main/scala/graft/ScaleProbe.scala`). The
+    * check is BATCH-proportional: a resident per-cell occupancy map
+    * (nlist-bounded, the centroid array's own bound) initializes from
+    * ONE layout count at stream
     * start and then accretes each appended batch's
     * [[graft.operators.IvfIndex.batchCellCounts]] — re-counting the
     * layout happens only AFTER a repair renumbers cells, which the cap

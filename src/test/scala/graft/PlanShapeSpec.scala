@@ -88,8 +88,9 @@ class PlanShapeSpec extends AnyFunSuite {
     // (e.g. if the explode-replication ever defeated size estimation).
     // The case salting exists for — a small side beyond broadcast
     // reach, where the salted SMJ spreads the hot key over `factor`
-    // tasks — is measured by `ScaleProbe ... skew`, not plan-testable
-    // at fixture scale.
+    // tasks — was measured at r8 by the removed ScaleProbe `skew` mode
+    // (`git show e105133:src/main/scala/graft/ScaleProbe.scala`), not
+    // plan-testable at fixture scale.
     val p = plan("skew_join")
     assert(p.contains("BroadcastHashJoin"),
       "factor-replicated small side no longer broadcasts — explode defeated " +

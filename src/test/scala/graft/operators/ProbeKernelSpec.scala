@@ -83,7 +83,8 @@ class ProbeKernelSpec extends AnyFunSuite {
     val (flat, d) = graft.expressions.NearestCell.flatten(centroidVectors)
     val q = queryFrame(queryVectors, withNull = true)
     for (nprobe <- Seq(1, 2, 3, 5, centroidVectors.length, centroidVectors.length + 3)) {
-      val want = ordered(crossJoinProbes(centroidVectors, q, nprobe))
+      // a NULL query vector probes no cell (the reference probed the lowest)
+      val want = ordered(crossJoinProbes(centroidVectors, q, nprobe)) + (2000L -> Nil)
       for (codegen <- Seq("CODEGEN_ONLY", "NO_CODEGEN")) {
         spark.conf.set("spark.sql.codegen.factoryMode", codegen)
         try {
@@ -100,7 +101,7 @@ class ProbeKernelSpec extends AnyFunSuite {
     }
   }
 
-  test("probesMany equals the cross-join block on every tier's probe seam; NULL query vectors probe the lowest cells") {
+  test("probesMany equals the cross-join block on every tier's probe seam; NULL query vectors probe no cells") {
     val q = queryFrame(queryVectors, withNull = true)
     val corpus = queryFrame(queryVectors.filter(_._1 < 1000L), withNull = false)
       .select(col("qid").as("id"), col("qe").as("emb"))
@@ -111,14 +112,13 @@ class ProbeKernelSpec extends AnyFunSuite {
       val want = crossJoinProbes(centroidVectors, q, nprobe)
         .select(col("qid"), explode(col("cells")).as("cell"))
         .select(col("qid"), col("cell").cast("int"))
-        .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
+        .collect().map(r => (r.getLong(0), r.getInt(1))).toSet.filter(_._1 != 2000L)
       for (idx <- Seq(vecTier, coded)) {
         val got = idx.probesMany(q, "qid", "qe", nprobe).collect()
           .map(r => (r.getLong(0), r.getInt(1)))
         assert(got.length == got.toSet.size, "one row per (query, cell)")
         assert(got.toSet == want, s"nprobe $nprobe")
-        assert(got.filter(_._1 == 2000L).map(_._2).toSet == (0 until nprobe).toSet,
-          "a NULL query vector scores 0 everywhere and probes the lowest cells")
+        assert(got.filter(_._1 == 2000L).isEmpty, "a NULL query vector probes no cells")
       }
     }
   }
@@ -169,7 +169,8 @@ class ProbeKernelSpec extends AnyFunSuite {
       val idx = IvfPqIndex.withArtifacts(corpus, "emb", centroidVectors, model,
         byResidual = byResidual)
       val got = idx.searchMany(q, "qid", "qe", "id", k = 4, nprobe = nprobe)
-      val want = crossJoinSearch(idx, q, 4, nprobe)
+      // a NULL query vector probes no cell, so it serves no rows
+      val want = crossJoinSearch(idx, q, 4, nprobe).where(col("qid") =!= 2000L)
       assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
         s"byResidual $byResidual, nprobe $nprobe")
     }
