@@ -453,9 +453,8 @@ object SparkEntry {
       half.save(path)
       val stream = StreamOps.readParquetStream(s, d, "embeddings.parquet")
         .where(col("vec_id") % 2 === 1)
-      val q = StreamOps.ivfPqIngestPerBatch(stream, half, path, "embedding",
-        baselineSelfSim = 1.0, compactFilesPerCell = 1)
-      try q.processAllAvailable() finally q.stop()
+      StreamOps.drain(_ => StreamOps.ivfPqIngestPerBatch(stream, half, path,
+        "embedding", baselineSelfSim = 1.0, compactFilesPerCell = 1))(_ => Nil): Unit
     }
   }
 
@@ -868,10 +867,8 @@ object SparkEntry {
       val docs = StreamOps.readParquetStream(s, d, "documents.parquet")
         .where(col("doc_id") < 5)
       val embedded = StreamOps.embedStream(docs, "text", HashingEmbedder(dim = 64))
-      val q = embedded.writeStream.outputMode("append").format("memory")
-        .queryName("graft_embed_hashing_stream").start()
-      try q.processAllAvailable() finally q.stop()
-      s.table("graft_embed_hashing_stream")
+      val rows = StreamOps.drain(StreamOps.perBatch(embedded))(_.collect())
+      s.createDataFrame(java.util.Arrays.asList(rows: _*), embedded.schema)
         .select(col("doc_id"),
           round(aggregate(col("embedding"), lit(0.0),
             (a, v) => a + abs(v.cast("double"))), 6).as("l1"),
@@ -962,18 +959,13 @@ object SparkEntry {
         .where(col("vec_id") < 10)
         .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
       val corpus = Tables(s, d, "embeddings")
-      val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
-      val q = StreamOps.nearestPerBatch(qStream, corpus,
-        "query_id", "qe", "vec_id", "embedding", k = 3) { (res, _) =>
-        buf.synchronized {
-          buf ++= res.select(col("query_id"), col("vec_id"),
-              round(col("similarity"), 6)).collect()
-            .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-        }
-      }
-      try q.processAllAvailable() finally q.stop()
       import s.implicits._
-      buf.toSeq.toDF("query_id", "vec_id", "similarity")
+      StreamOps.drain(StreamOps.nearestPerBatch(qStream, corpus,
+        "query_id", "qe", "vec_id", "embedding", k = 3))(
+        _.select(col("query_id"), col("vec_id"),
+            round(col("similarity"), 6)).collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))))
+        .toDF("query_id", "vec_id", "similarity")
         .orderBy(col("query_id"), desc("similarity"), col("vec_id"))
     }),
     // §2.3 D: embedding-cosine near-dup pairs (exact threshold self-join)
@@ -1054,16 +1046,11 @@ object SparkEntry {
       val cent = emb.agg(AvgVector.column(col("embedding")).as("c")).head()
         .getSeq[Double](0).map(_.toFloat).toArray
       val stream = StreamOps.readParquetStream(s, d, "embeddings.parquet")
-      val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
-      val q = StreamOps.semanticDedupByCentroidPerBatch(stream, Array(cent),
-        "embedding", "vec_id", eps = 0.7) { (survivors, _) =>
-        buf.synchronized {
-          buf ++= survivors.select("vec_id").collect().map(_.getLong(0))
-        }
-      }
-      try q.processAllAvailable() finally q.stop()
       import s.implicits._
-      buf.toSeq.toDF("vec_id").orderBy(col("vec_id"))
+      StreamOps.drain(StreamOps.semanticDedupByCentroidPerBatch(stream, Array(cent),
+        "embedding", "vec_id", eps = 0.7))(
+        _.select("vec_id").collect().map(_.getLong(0)))
+        .toDF("vec_id").orderBy(col("vec_id"))
     }),
     // §2.3 D ORACLED (round 15): the nprobe boundary-recall knob (r14
     // VERDICT #6) at its exact degenerate — TWO FIXED centroids
@@ -1129,16 +1116,11 @@ object SparkEntry {
       val dim = emb.where(col("embedding").isNotNull)
         .select(size(col("embedding"))).head().getInt(0)
       val stream = StreamOps.readParquetStream(s, d, "embeddings.parquet")
-      val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
-      val q = StreamOps.semanticDedupPerBatch(stream,
-        Array(Array.fill(dim)(0f)), "embedding", "vec_id", 0.35) { (survivors, _) =>
-        buf.synchronized {
-          buf ++= survivors.select("vec_id").collect().map(_.getLong(0))
-        }
-      }
-      try q.processAllAvailable() finally q.stop()
       import s.implicits._
-      buf.toSeq.toDF("vec_id").orderBy(col("vec_id"))
+      StreamOps.drain(StreamOps.semanticDedupPerBatch(stream,
+        Array(Array.fill(dim)(0f)), "embedding", "vec_id", 0.35))(
+        _.select("vec_id").collect().map(_.getLong(0)))
+        .toDF("vec_id").orderBy(col("vec_id"))
     }),
     // §2.3 S × D ORACLED (round 15): streaming SemDeDup on the BOUNDED
     // retained store (r14 VERDICT #1) at the ALL-EXACT degenerate —
@@ -1153,17 +1135,12 @@ object SparkEntry {
         .select(size(col("embedding"))).head().getInt(0)
       val model = PqIndex.fit(emb, "embedding", m = 8)
       val stream = StreamOps.readParquetStream(s, d, "embeddings.parquet")
-      val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
-      val q = StreamOps.semanticDedupPerBatchBounded(stream,
-        Array(Array.fill(dim)(0f)), model, "embedding", "vec_id", 0.35,
-        exactCapPerCell = 1L << 40) { (survivors, _) =>
-        buf.synchronized {
-          buf ++= survivors.select("vec_id").collect().map(_.getLong(0))
-        }
-      }
-      try q.processAllAvailable() finally q.stop()
       import s.implicits._
-      buf.toSeq.toDF("vec_id").orderBy(col("vec_id"))
+      StreamOps.drain(StreamOps.semanticDedupPerBatchBounded(stream,
+        Array(Array.fill(dim)(0f)), model, "embedding", "vec_id", 0.35,
+        exactCapPerCell = 1L << 40))(
+        _.select("vec_id").collect().map(_.getLong(0)))
+        .toDF("vec_id").orderBy(col("vec_id"))
     }),
     // §2.3 S × D ORACLED (round 15): the same stream at the ALL-CODED
     // degenerate — exactCapPerCell = 0 retains EVERY survivor as PQ
@@ -1185,17 +1162,12 @@ object SparkEntry {
         "semdedup_stream_coded needs a lossless PQ fit (every distinct " +
           "subvector kept) — the fixture outgrew k; raise k or maxTrain")
       val stream = StreamOps.readParquetStream(s, d, "embeddings.parquet")
-      val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
-      val q = StreamOps.semanticDedupPerBatchBounded(stream,
-        Array(Array.fill(dim)(0f)), model, "embedding", "vec_id", 0.35,
-        exactCapPerCell = 0L) { (survivors, _) =>
-        buf.synchronized {
-          buf ++= survivors.select("vec_id").collect().map(_.getLong(0))
-        }
-      }
-      try q.processAllAvailable() finally q.stop()
       import s.implicits._
-      buf.toSeq.toDF("vec_id").orderBy(col("vec_id"))
+      StreamOps.drain(StreamOps.semanticDedupPerBatchBounded(stream,
+        Array(Array.fill(dim)(0f)), model, "embedding", "vec_id", 0.35,
+        exactCapPerCell = 0L))(
+        _.select("vec_id").collect().map(_.getLong(0)))
+        .toDF("vec_id").orderBy(col("vec_id"))
     }),
     // §2.3 D (round 14): the same incremental semantic dedup in its
     // DEPLOYED shape — fresh batch assigned map-side to the frozen
@@ -1237,17 +1209,12 @@ object SparkEntry {
     // ParagraphDedupSpec's two-batch equivalence test.
     "dedup_paragraphs_stream" -> ((s, d) => {
       val docsStream = StreamOps.readParquetStream(s, d, "documents.parquet")
-      val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, String)]
-      val q = StreamOps.dedupParagraphsPerBatch(docsStream, "text", "doc_id",
-        sep = " the ") { (cleaned, _) =>
-        buf.synchronized {
-          buf ++= cleaned.select("doc_id", "text").collect()
-            .map(r => (r.getLong(0), r.getString(1)))
-        }
-      }
-      try q.processAllAvailable() finally q.stop()
       import s.implicits._
-      buf.toSeq.toDF("doc_id", "text").orderBy(col("doc_id"))
+      StreamOps.drain(StreamOps.dedupParagraphsPerBatch(docsStream, "text", "doc_id",
+        sep = " the "))(
+        _.select("doc_id", "text").collect()
+          .map(r => (r.getLong(0), r.getString(1))))
+        .toDF("doc_id", "text").orderBy(col("doc_id"))
     }),
     // §2.3 S × D (round 10): the same streaming paragraph dedup on the
     // HASHED 128-bit seen-store — 16 bytes of state per distinct
@@ -1256,17 +1223,12 @@ object SparkEntry {
     // collision caveat, so it shares the batch oracle too.
     "dedup_paragraphs_stream_hashed" -> ((s, d) => {
       val docsStream = StreamOps.readParquetStream(s, d, "documents.parquet")
-      val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, String)]
-      val q = StreamOps.dedupParagraphsPerBatch(docsStream, "text", "doc_id",
-        sep = " the ", hashedStore = true) { (cleaned, _) =>
-        buf.synchronized {
-          buf ++= cleaned.select("doc_id", "text").collect()
-            .map(r => (r.getLong(0), r.getString(1)))
-        }
-      }
-      try q.processAllAvailable() finally q.stop()
       import s.implicits._
-      buf.toSeq.toDF("doc_id", "text").orderBy(col("doc_id"))
+      StreamOps.drain(StreamOps.dedupParagraphsPerBatch(docsStream, "text", "doc_id",
+        sep = " the ", hashedStore = true))(
+        _.select("doc_id", "text").collect()
+          .map(r => (r.getLong(0), r.getString(1))))
+        .toDF("doc_id", "text").orderBy(col("doc_id"))
     }),
     // §2.3 S × D (round 13): the same streaming paragraph dedup on the
     // BOUNDED-memory Bloom store — Dolma's actual deployment shape,
@@ -1279,17 +1241,12 @@ object SparkEntry {
     // ParaBloomSpec's.
     "dedup_paragraphs_stream_bloom" -> ((s, d) => {
       val docsStream = StreamOps.readParquetStream(s, d, "documents.parquet")
-      val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, String)]
-      val q = StreamOps.dedupParagraphsPerBatchBloom(docsStream, "text", "doc_id",
-        sep = " the ", expectedItems = 1L << 17, fpp = 1e-4) { (cleaned, _) =>
-        buf.synchronized {
-          buf ++= cleaned.select("doc_id", "text").collect()
-            .map(r => (r.getLong(0), r.getString(1)))
-        }
-      }
-      try q.processAllAvailable() finally q.stop()
       import s.implicits._
-      buf.toSeq.toDF("doc_id", "text").orderBy(col("doc_id"))
+      StreamOps.drain(StreamOps.dedupParagraphsPerBatchBloom(docsStream, "text", "doc_id",
+        sep = " the ", expectedItems = 1L << 17, fpp = 1e-4))(
+        _.select("doc_id", "text").collect()
+          .map(r => (r.getLong(0), r.getString(1))))
+        .toDF("doc_id", "text").orderBy(col("doc_id"))
     }),
     // §2.3 S × D (round 14): the same streaming paragraph dedup on the
     // SHARDED Bloom bank — the store shape past a single filter's
@@ -1303,17 +1260,12 @@ object SparkEntry {
     // restart are ParaBloomBankSpec's.
     "dedup_paragraphs_stream_bloom_bank" -> ((s, d) => {
       val docsStream = StreamOps.readParquetStream(s, d, "documents.parquet")
-      val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, String)]
-      val q = StreamOps.dedupParagraphsPerBatchBloomBank(docsStream, "text", "doc_id",
-        sep = " the ", expectedItems = 1L << 17, fpp = 1e-4, numShards = 4) { (cleaned, _) =>
-        buf.synchronized {
-          buf ++= cleaned.select("doc_id", "text").collect()
-            .map(r => (r.getLong(0), r.getString(1)))
-        }
-      }
-      try q.processAllAvailable() finally q.stop()
       import s.implicits._
-      buf.toSeq.toDF("doc_id", "text").orderBy(col("doc_id"))
+      StreamOps.drain(StreamOps.dedupParagraphsPerBatchBloomBank(docsStream, "text", "doc_id",
+        sep = " the ", expectedItems = 1L << 17, fpp = 1e-4, numShards = 4))(
+        _.select("doc_id", "text").collect()
+          .map(r => (r.getLong(0), r.getString(1))))
+        .toDF("doc_id", "text").orderBy(col("doc_id"))
     }),
     // §2.3 D ORACLED (round 14): EXACT SUBSTRING dedup — Lee et al.
     // 2022's ExactSubstr, the published rung between paragraph dedup
@@ -1364,17 +1316,12 @@ object SparkEntry {
     // two-batch store-carry equivalence is SubstringDedupSpec's.
     "dedup_substring_stream" -> ((s, d) => {
       val docsStream = StreamOps.readParquetStream(s, d, "documents.parquet")
-      val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, String)]
-      val q = StreamOps.dedupSubstringPerBatch(docsStream, "text", "doc_id",
-        k = 13) { (cleaned, _) =>
-        buf.synchronized {
-          buf ++= cleaned.select("doc_id", "text").collect()
-            .map(r => (r.getLong(0), r.getString(1)))
-        }
-      }
-      try q.processAllAvailable() finally q.stop()
       import s.implicits._
-      buf.toSeq.toDF("doc_id", "text").orderBy(col("doc_id"))
+      StreamOps.drain(StreamOps.dedupSubstringPerBatch(docsStream, "text", "doc_id",
+        k = 13))(
+        _.select("doc_id", "text").collect()
+          .map(r => (r.getLong(0), r.getString(1))))
+        .toDF("doc_id", "text").orderBy(col("doc_id"))
     }),
     // §2.3 S × D ORACLED (round 15): the same drain on the
     // BOUNDED-memory Bloom gram store — the substring tier's Dolma
@@ -1386,17 +1333,12 @@ object SparkEntry {
     // direction are SubstringDedupSpec's.
     "dedup_substring_stream_bloom" -> ((s, d) => {
       val docsStream = StreamOps.readParquetStream(s, d, "documents.parquet")
-      val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, String)]
-      val q = StreamOps.dedupSubstringPerBatchBloom(docsStream, "text", "doc_id",
-        k = 13) { (cleaned, _) =>
-        buf.synchronized {
-          buf ++= cleaned.select("doc_id", "text").collect()
-            .map(r => (r.getLong(0), r.getString(1)))
-        }
-      }
-      try q.processAllAvailable() finally q.stop()
       import s.implicits._
-      buf.toSeq.toDF("doc_id", "text").orderBy(col("doc_id"))
+      StreamOps.drain(StreamOps.dedupSubstringPerBatchBloom(docsStream, "text", "doc_id",
+        k = 13))(
+        _.select("doc_id", "text").collect()
+          .map(r => (r.getLong(0), r.getString(1))))
+        .toDF("doc_id", "text").orderBy(col("doc_id"))
     }),
     // §2.3 D: exact unigram-Jaccard near-dedup survivors, blocked by source
     "dedup_jaccard" -> ((s, d) => {
@@ -1572,15 +1514,10 @@ object SparkEntry {
       val docsStream = StreamOps.readParquetStream(s, d, "documents.parquet")
         .where(col("doc_id") % 7 =!= 0)
       val evalSet = Tables(s, d, "documents").where(col("doc_id") % 7 === 0)
-      val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
-      val q = StreamOps.decontaminatePerBatch(docsStream, evalSet, "text", "doc_id") {
-        (batch, _) => buf.synchronized {
-          buf ++= batch.select("doc_id").collect().map(_.getLong(0))
-        }
-      }
-      try q.processAllAvailable() finally q.stop()
       import s.implicits._
-      buf.toSeq.toDF("doc_id").orderBy(col("doc_id"))
+      StreamOps.drain(StreamOps.decontaminatePerBatch(docsStream, evalSet, "text", "doc_id"))(
+        _.select("doc_id").collect().map(_.getLong(0)))
+        .toDF("doc_id").orderBy(col("doc_id"))
     }),
     // sources ORACLED (round 13): JSONL interchange — the format the
     // published pipelines ship (Dolma's .jsonl.gz shards). The corpus
@@ -1608,15 +1545,9 @@ object SparkEntry {
       val docs = Tables(s, d, "documents")
       val dir = java.nio.file.Files.createTempDirectory("graft_jsonl_stream").toString
       DocIO.writeJsonl(docs, dir, compression = Some("gzip"))
-      val buf = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
-      val q = DocIO.readJsonlStream(s, dir, docs.schema).writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          buf.synchronized { buf ++= batch.collect() }: Unit
-        }.start()
-      try q.processAllAvailable() finally q.stop()
-      s.createDataFrame(buf.synchronized {
-          java.util.Arrays.asList(buf.toArray: _*)
-        }, docs.schema)
+      val rows = StreamOps.drain(StreamOps.perBatch(
+        DocIO.readJsonlStream(s, dir, docs.schema)))(_.collect())
+      s.createDataFrame(java.util.Arrays.asList(rows: _*), docs.schema)
         .select(docs.columns.map(col).toIndexedSeq: _*)
         .orderBy(col("doc_id"))
     }),
@@ -1930,20 +1861,15 @@ object SparkEntry {
       val queries = StreamOps.readParquetStream(s, d, "embeddings.parquet")
         .where(col("vec_id") < 10)
         .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-      val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Int, Double)]
-      val q = StreamOps.mmrManyFromIndexPerBatch(queries, idx,
+      import s.implicits._
+      StreamOps.drain(StreamOps.mmrManyFromIndexPerBatch(queries, idx,
         e.select(col("vec_id"), col("embedding")), "query_id", "qe",
         "vec_id", "embedding", n = 3, lambda = 1.0, shortlist = 10,
-        nprobe = idx.centroidVectors.length) { (res, _) =>
-        buf.synchronized {
-          buf ++= res.select(col("query_id"), col("vec_id"), col("mmr_rank"),
-              round(col("similarity"), 6)).collect()
-            .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3)))
-        }
-      }
-      try q.processAllAvailable() finally q.stop()
-      import s.implicits._
-      buf.toSeq.toDF("query_id", "vec_id", "mmr_rank", "similarity")
+        nprobe = idx.centroidVectors.length))(
+        _.select(col("query_id"), col("vec_id"), col("mmr_rank"),
+            round(col("similarity"), 6)).collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3))))
+        .toDF("query_id", "vec_id", "mmr_rank", "similarity")
         .orderBy(col("query_id"), col("mmr_rank"))
     }),
     // §2.3 J ORACLED telemetry (round 18): the recall-vs-nprobe CURVE
@@ -2289,20 +2215,15 @@ object SparkEntry {
       val nCorpus = e.count().toInt
       val anchors = StreamOps.readParquetStream(s, d, "embeddings.parquet")
         .where(col("vec_id") < 50)
-      val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
-      val q = StreamOps.hardNegativesPerBatch(anchors, idx, e,
+      import s.implicits._
+      StreamOps.drain(StreamOps.hardNegativesPerBatch(anchors, idx, e,
         "vec_id", "embedding", "label", k = 3,
         candidatesPerAnchor = nCorpus,
-        nprobe = idx.centroidVectors.length) { (res, _) =>
-        buf.synchronized {
-          buf ++= res.select(col("anchor_id"), col("neg_id"),
-              round(col("similarity"), 6)).collect()
-            .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-        }
-      }
-      try q.processAllAvailable() finally q.stop()
-      import s.implicits._
-      buf.toSeq.toDF("anchor_id", "neg_id", "similarity")
+        nprobe = idx.centroidVectors.length))(
+        _.select(col("anchor_id"), col("neg_id"),
+            round(col("similarity"), 6)).collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))))
+        .toDF("anchor_id", "neg_id", "similarity")
         .orderBy(col("anchor_id"), desc("similarity"), col("neg_id"))
     }),
     // §2.3 T: token counting + length stats
@@ -2562,20 +2483,15 @@ object SparkEntry {
       val bounds = TextAnalysis.bucketBoundaries(scoredRef, "lm_nll", "lang")
       val stream = StreamOps.readParquetStream(s, d, "documents.parquet")
         .where(col("doc_id") % 7 =!= 0)
-      val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Double, String)]
-      val q = StreamOps.pipelinePretrainPerBatch(stream, evalSet, model, bounds,
+      import s.implicits._
+      StreamOps.drain(StreamOps.pipelinePretrainPerBatch(stream, evalSet, model, bounds,
         "text", "doc_id", "lang", sep = " the ",
         substringK = Some(13),
         semdedup = Some(StreamOps.SemdedupCentroidStage(
-          emb, "vec_id", "embedding", Array(cent), eps = 0.7))) { (shipped, _) =>
-        buf.synchronized {
-          buf ++= shipped.select("doc_id", "lang", "lm_nll", "bucket").collect()
-            .map(r => (r.getLong(0), r.getString(1), r.getDouble(2), r.getString(3)))
-        }
-      }
-      try q.processAllAvailable() finally q.stop()
-      import s.implicits._
-      buf.toSeq.toDF("doc_id", "lang", "lm_nll", "bucket").orderBy(col("doc_id"))
+          emb, "vec_id", "embedding", Array(cent), eps = 0.7))))(
+        _.select("doc_id", "lang", "lm_nll", "bucket").collect()
+          .map(r => (r.getLong(0), r.getString(1), r.getDouble(2), r.getString(3))))
+        .toDF("doc_id", "lang", "lm_nll", "bucket").orderBy(col("doc_id"))
     }),
     // §2.3 T × composition (round 10): the COMPLETE Dolma-style tail —
     // the base pipeline continues through α = 0.5 temperature mixing
@@ -2646,17 +2562,12 @@ object SparkEntry {
       val bounds = TextAnalysis.bucketBoundaries(scoredRef, "lm_nll", "lang")
       val stream = StreamOps.readParquetStream(s, d, "documents.parquet")
         .where(col("doc_id") % 7 =!= 0)
-      val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Double, String)]
-      val q = StreamOps.pipelinePretrainPerBatch(stream, evalSet, model, bounds,
-        "text", "doc_id", "lang", sep = " the ") { (shipped, _) =>
-        buf.synchronized {
-          buf ++= shipped.select("doc_id", "lang", "lm_nll", "bucket").collect()
-            .map(r => (r.getLong(0), r.getString(1), r.getDouble(2), r.getString(3)))
-        }
-      }
-      try q.processAllAvailable() finally q.stop()
       import s.implicits._
-      buf.toSeq.toDF("doc_id", "lang", "lm_nll", "bucket").orderBy(col("doc_id"))
+      StreamOps.drain(StreamOps.pipelinePretrainPerBatch(stream, evalSet, model, bounds,
+        "text", "doc_id", "lang", sep = " the "))(
+        _.select("doc_id", "lang", "lm_nll", "bucket").collect()
+          .map(r => (r.getLong(0), r.getString(1), r.getDouble(2), r.getString(3))))
+        .toDF("doc_id", "lang", "lm_nll", "bucket").orderBy(col("doc_id"))
     }),
     // §2.3 S × composition ORACLED (round 15): the SUBSTRING-staged
     // chain EXECUTED AS A STREAM — pipelinePretrainPerBatch with
@@ -2685,18 +2596,13 @@ object SparkEntry {
       val bounds = TextAnalysis.bucketBoundaries(scoredRef, "lm_nll", "lang")
       val stream = StreamOps.readParquetStream(s, d, "documents.parquet")
         .where(col("doc_id") % 7 =!= 0)
-      val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Double, String)]
-      val q = StreamOps.pipelinePretrainPerBatch(stream, evalSet, model, bounds,
-        "text", "doc_id", "lang", sep = " the ",
-        substringK = Some(13)) { (shipped, _) =>
-        buf.synchronized {
-          buf ++= shipped.select("doc_id", "lang", "lm_nll", "bucket").collect()
-            .map(r => (r.getLong(0), r.getString(1), r.getDouble(2), r.getString(3)))
-        }
-      }
-      try q.processAllAvailable() finally q.stop()
       import s.implicits._
-      buf.toSeq.toDF("doc_id", "lang", "lm_nll", "bucket").orderBy(col("doc_id"))
+      StreamOps.drain(StreamOps.pipelinePretrainPerBatch(stream, evalSet, model, bounds,
+        "text", "doc_id", "lang", sep = " the ",
+        substringK = Some(13)))(
+        _.select("doc_id", "lang", "lm_nll", "bucket").collect()
+          .map(r => (r.getLong(0), r.getString(1), r.getDouble(2), r.getString(3))))
+        .toDF("doc_id", "lang", "lm_nll", "bucket").orderBy(col("doc_id"))
     }),
     // §2.3 S × composition (round 15): the substring-staged chain with
     // the gram store BOUNDED — the fully-bounded deployment shape (the
@@ -2722,20 +2628,14 @@ object SparkEntry {
       val bounds = TextAnalysis.bucketBoundaries(scoredRef, "lm_nll", "lang")
       val stream = StreamOps.readParquetStream(s, d, "documents.parquet")
         .where(col("doc_id") % 7 =!= 0)
-      val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Double, String)]
-      val q = StreamOps.pipelinePretrainPerBatch(stream, evalSet, model, bounds,
+      import s.implicits._
+      StreamOps.drain(StreamOps.pipelinePretrainPerBatch(stream, evalSet, model, bounds,
         "text", "doc_id", "lang", sep = " the ",
         substringK = Some(13),
-        substringBloom = Some(graft.operators.ParaBloom.create(1L << 19, 1e-4))) {
-        (shipped, _) =>
-          buf.synchronized {
-            buf ++= shipped.select("doc_id", "lang", "lm_nll", "bucket").collect()
-              .map(r => (r.getLong(0), r.getString(1), r.getDouble(2), r.getString(3)))
-          }
-      }
-      try q.processAllAvailable() finally q.stop()
-      import s.implicits._
-      buf.toSeq.toDF("doc_id", "lang", "lm_nll", "bucket").orderBy(col("doc_id"))
+        substringBloom = Some(graft.operators.ParaBloom.create(1L << 19, 1e-4))))(
+        _.select("doc_id", "lang", "lm_nll", "bucket").collect()
+          .map(r => (r.getLong(0), r.getString(1), r.getDouble(2), r.getString(3))))
+        .toDF("doc_id", "lang", "lm_nll", "bucket").orderBy(col("doc_id"))
     }),
     // §2.3 S × composition (round 14): the SAME frozen-artifact chain
     // with the dedup stage on the BOUNDED Bloom store — the only
@@ -2755,19 +2655,13 @@ object SparkEntry {
       val bounds = TextAnalysis.bucketBoundaries(scoredRef, "lm_nll", "lang")
       val stream = StreamOps.readParquetStream(s, d, "documents.parquet")
         .where(col("doc_id") % 7 =!= 0)
-      val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Double, String)]
-      val q = StreamOps.pipelinePretrainPerBatch(stream, evalSet, model, bounds,
-        "text", "doc_id", "lang", sep = " the ",
-        bloomStore = Some(graft.operators.ParaBloom.create(1L << 17, 1e-4))) {
-        (shipped, _) =>
-          buf.synchronized {
-            buf ++= shipped.select("doc_id", "lang", "lm_nll", "bucket").collect()
-              .map(r => (r.getLong(0), r.getString(1), r.getDouble(2), r.getString(3)))
-          }
-      }
-      try q.processAllAvailable() finally q.stop()
       import s.implicits._
-      buf.toSeq.toDF("doc_id", "lang", "lm_nll", "bucket").orderBy(col("doc_id"))
+      StreamOps.drain(StreamOps.pipelinePretrainPerBatch(stream, evalSet, model, bounds,
+        "text", "doc_id", "lang", sep = " the ",
+        bloomStore = Some(graft.operators.ParaBloom.create(1L << 17, 1e-4))))(
+        _.select("doc_id", "lang", "lm_nll", "bucket").collect()
+          .map(r => (r.getLong(0), r.getString(1), r.getDouble(2), r.getString(3))))
+        .toDF("doc_id", "lang", "lm_nll", "bucket").orderBy(col("doc_id"))
     }),
     // §2.3 T: corpus vocabulary statistics (term frequencies, top 20)
     "vocab_topk" -> ((s, d) =>
@@ -3078,17 +2972,11 @@ object SparkEntry {
       val model = TextAnalysis.loadDsir(s, mPath)
       val stream = StreamOps.readParquetStream(s, d, "documents.parquet")
         .where(col("doc_id") % 7 =!= 0)
-      val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
-      val q = StreamOps.dsirScorePerBatch(stream, model, "text", "doc_id") {
-        (scored, _) =>
-          buf.synchronized {
-            buf ++= scored.select("doc_id", "n_feats", "dsir_logw").collect()
-              .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-          }
-      }
-      try q.processAllAvailable() finally q.stop()
       import s.implicits._
-      buf.toSeq.toDF("doc_id", "n_feats", "dsir_logw").orderBy(col("doc_id"))
+      StreamOps.drain(StreamOps.dsirScorePerBatch(stream, model, "text", "doc_id"))(
+        _.select("doc_id", "n_feats", "dsir_logw").collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))))
+        .toDF("doc_id", "n_feats", "dsir_logw").orderBy(col("doc_id"))
     }),
     // §2.3 T × composition ORACLED (round 15): DSIR as a PIPELINE
     // stage — the DCLM-style curation chain with importance-based
@@ -3253,12 +3141,8 @@ object SparkEntry {
       val model = classifierFor(s, d) // shared with the batch row — fit is deterministic
       val stream = StreamOps.readParquetStream(s, d, "documents.parquet")
         .where(col("doc_id") % 7 =!= 0)
-      val buf = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
-      val q = StreamOps.scoreClassifierPerBatch(stream, model, "text", "doc_id",
-        broadcastWeights = true) { (scored, _) =>
-        buf.synchronized { buf ++= scored.collect() }: Unit
-      }
-      try q.processAllAvailable() finally q.stop()
+      val rows = StreamOps.drain(StreamOps.scoreClassifierPerBatch(stream, model,
+        "text", "doc_id", broadcastWeights = true))(_.collect())
       val outSchema = org.apache.spark.sql.types.StructType(Seq(
         docs.schema("doc_id"),
         org.apache.spark.sql.types.StructField("n_toks",
@@ -3267,9 +3151,7 @@ object SparkEntry {
           org.apache.spark.sql.types.DoubleType),
         org.apache.spark.sql.types.StructField("clf_prob",
           org.apache.spark.sql.types.DoubleType)))
-      s.createDataFrame(buf.synchronized {
-          java.util.Arrays.asList(buf.toArray: _*)
-        }, outSchema)
+      s.createDataFrame(java.util.Arrays.asList(rows: _*), outSchema)
         .select(col("doc_id"), col("n_toks"), col("clf_logit"), col("clf_prob"))
         .orderBy(col("doc_id"))
     }),
@@ -3612,17 +3494,12 @@ object SparkEntry {
         Files.copy(Paths.get(s"$d/events.parquet"), dir.resolve("b.parquet"),
           StandardCopyOption.REPLACE_EXISTING)
         val stream = StreamOps.readEventsStream(s, dir.toString)
-        val q = StreamOps.dedupStream(stream, Seq("event_id"))
-          .select("event_id")
-          .writeStream.outputMode("append").format("memory")
-          .queryName("graft_events_dedup_stream").start()
-        try q.processAllAvailable() finally q.stop()
-        // materialize before the staged files are deleted: the memory
-        // sink holds rows, but orderBy still plans over the sink table
+        // drained rows are driver-resident before the staged files go
         import s.implicits._
-        s.table("graft_events_dedup_stream")
-          .select("event_id").collect().map(_.getLong(0)).toSeq.sorted
-          .toDF("event_id")
+        StreamOps.drain(StreamOps.perBatch(
+            StreamOps.dedupStream(stream, Seq("event_id")).select("event_id")))(
+          _.collect().map(_.getLong(0)))
+          .sorted.toDF("event_id")
       } finally {
         Files.deleteIfExists(dir.resolve("a.parquet"))
         Files.deleteIfExists(dir.resolve("b.parquet"))
@@ -3638,13 +3515,11 @@ object SparkEntry {
     // exercised custom streaming state.
     "events_running_stats_stream" -> ((s, d) => {
       val stream = StreamOps.readEventsStream(s, d, globFilter = Some("events.parquet"))
-      val q = StreamOps.runningUserStats(stream)
-        .writeStream.outputMode("append").format("memory")
-        .queryName("graft_events_running_stats_stream").start()
-      try q.processAllAvailable() finally q.stop()
+      val running = StreamOps.runningUserStats(stream).toDF()
+      val rows = StreamOps.drain(StreamOps.perBatch(running))(_.collect())
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("userId")).orderBy(desc("nEvents"))
-      s.table("graft_events_running_stats_stream")
+      s.createDataFrame(java.util.Arrays.asList(rows: _*), running.schema)
         .withColumn("__rn", row_number().over(w)).where(col("__rn") === 1)
         .select(col("userId").as("user_id"), col("nEvents").as("n_events"),
           round(col("totalValue"), 2).as("total_value"))
@@ -3706,15 +3581,10 @@ object SparkEntry {
         .add("asof_ts", clicks.schema("ts").dataType)
       val schema = shape(s.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](), enrichedSchema)).schema
-      val buf = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
-      val q = StreamOps.asofEnrichPerBatch(purchases, clicks, "user_id", "user_id",
-        "ts", "ts", rightPayload = Seq("event_id"), rightTieBreak = "event_id") {
-        (res, _) =>
-          val out = shape(res)
-          buf.synchronized { buf ++= out.collect() }
-      }
-      try q.processAllAvailable() finally q.stop()
-      s.createDataFrame(java.util.Arrays.asList(buf.toArray: _*), schema)
+      val rows = StreamOps.drain(StreamOps.asofEnrichPerBatch(purchases, clicks,
+        "user_id", "user_id", "ts", "ts", rightPayload = Seq("event_id"),
+        rightTieBreak = "event_id"))(shape(_).collect())
+      s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
         .orderBy(col("purchase_id"))
     }),
     // §2.3 temporal: RANGE (interval) join — ALL clicks in the 24h
@@ -3952,17 +3822,12 @@ object SparkEntry {
           col("text"))
         .where(col("__n") >= 10)
         .select(col("doc_id"), lit(10).as("len"))
-      val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Int, Long)]
-      val q = StreamOps.packHistPerBatch(stream, "len", "doc_id",
-        maxLen = 64, maxPerPack = 4) { (packed, _) =>
-        buf.synchronized {
-          buf ++= packed.select("doc_id", "len", "pack_id").collect()
-            .map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
-        }
-      }
-      try q.processAllAvailable() finally q.stop()
       import s.implicits._
-      buf.toSeq.toDF("doc_id", "len", "pack_id").orderBy(col("doc_id"))
+      StreamOps.drain(StreamOps.packHistPerBatch(stream, "len", "doc_id",
+        maxLen = 64, maxPerPack = 4))(
+        _.select("doc_id", "len", "pack_id").collect()
+          .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))))
+        .toDF("doc_id", "len", "pack_id").orderBy(col("doc_id"))
     }),
     // §2.3 S × T ORACLED (round 16, r15 VERDICT #4): SPFHP streaming
     // with CARRIED OPEN PACKS — `packHistPerBatchCarried` seeds each
@@ -3981,17 +3846,12 @@ object SparkEntry {
           col("text"))
         .where(col("__n") >= 10)
         .select(col("doc_id"), lit(10).as("len"))
-      val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Int, Long)]
-      val q = StreamOps.packHistPerBatchCarried(stream, "len", "doc_id",
-        maxLen = 64, maxPerPack = 4) { (packed, _) =>
-        buf.synchronized {
-          buf ++= packed.select("doc_id", "len", "pack_id").collect()
-            .map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
-        }
-      }
-      try q.processAllAvailable() finally q.stop()
       import s.implicits._
-      buf.toSeq.toDF("doc_id", "len", "pack_id").orderBy(col("doc_id"))
+      StreamOps.drain(StreamOps.packHistPerBatchCarried(stream, "len", "doc_id",
+        maxLen = 64, maxPerPack = 4))(
+        _.select("doc_id", "len", "pack_id").collect()
+          .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))))
+        .toDF("doc_id", "len", "pack_id").orderBy(col("doc_id"))
     }),
     // §2.2: semi + anti joins (TPC-H Q4 shape, adapted to the fixture's
     // columns) — EXISTS/NOT EXISTS as left_semi/left_anti, the join
@@ -4277,9 +4137,8 @@ object SparkEntry {
         half.save(path)
         val stream = StreamOps.readParquetStream(s, d, "embeddings.parquet")
           .where(col("vec_id") % 2 === 1)
-        val q = StreamOps.annIngestPerBatch(stream, half, path, "embedding",
-          baselineSelfSim = Some(1.0), compactFilesPerCell = 1)
-        try q.processAllAvailable() finally q.stop()
+        StreamOps.drain(_ => StreamOps.annIngestPerBatch(stream, half, path,
+          "embedding", baselineSelfSim = Some(1.0), compactFilesPerCell = 1))(_ => Nil): Unit
       }
       val idx = OpqIvfPqIndex.load(s, path)
       require(idx.model.lossless,
@@ -4323,9 +4182,8 @@ object SparkEntry {
         half.save(path)
         val stream = StreamOps.readParquetStream(s, d, "embeddings.parquet")
           .where(col("vec_id") % 2 === 1)
-        val q = StreamOps.ivfIngestPerBatch(stream, half, path,
-          compactFilesPerCell = 1)
-        try q.processAllAvailable() finally q.stop()
+        StreamOps.drain(_ => StreamOps.ivfIngestPerBatch(stream, half, path,
+          compactFilesPerCell = 1))(_ => Nil): Unit
       }
       val idx = IvfIndex.load(s, path)
       val q = e.filter(col("vec_id") === 0).select("embedding")
@@ -4410,16 +4268,11 @@ object SparkEntry {
       val docs = StreamOps.readParquetStream(s, d, "documents.parquet")
         .withColumn("__score", length(col("text")).cast("double"))
         .withColumn("__toks", TextAnalysis.tokenCount(col("text")))
-      val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
-      val q = StreamOps.selectTokenBudgetPerBatch(docs, "__score", "doc_id",
-        "__toks", budget = 12000L, numBuckets = 64) { (sel, _) =>
-        buf.synchronized {
-          buf ++= sel.select("doc_id").collect().map(_.getLong(0))
-        }
-      }
-      try q.processAllAvailable() finally q.stop()
       import s.implicits._
-      buf.toSeq.toDF("doc_id").orderBy(col("doc_id"))
+      StreamOps.drain(StreamOps.selectTokenBudgetPerBatch(docs, "__score", "doc_id",
+        "__toks", budget = 12000L, numBuckets = 64))(
+        _.select("doc_id").collect().map(_.getLong(0)))
+        .toDF("doc_id").orderBy(col("doc_id"))
     }),
     // §2.3 T: deterministic stratified hash sampling (stable across
     // runs/partitionings; fractions per stratum)

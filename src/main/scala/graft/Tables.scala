@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Fixture access — one parquet per table under the scale-factor dir
   * (see /root/repo/TESTDATA.md). Reads stay lazy; Catalyst pushes
@@ -22,7 +22,7 @@ object Tables {
     * (The events nanos flag is set before the first events read, so
     * the cached schema is the nanosAsLong form both times.) */
   private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
+    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
 
   /** Bound the stale-schema blast radius (r21 ADVICE): the cache is
     * keyed by path alone, so a long-lived JVM (or a test suite reusing
@@ -32,6 +32,11 @@ object Tables {
     * `spark.read.parquet` directly. */
   def clearSchemaCache(): Unit = schemaCache.clear()
 
+  /** The memo itself, for readers other than [[apply]] (the fixture
+    * streams of graft.streaming.StreamOps): `read` runs once per key. */
+  private[graft] def cachedSchema(key: String)(read: => StructType): StructType =
+    schemaCache.computeIfAbsent(key, _ => read)
+
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     // events.ts is parquet TIMESTAMP(NANOS), which vanilla Spark refuses;
     // read it as a nanos long and rebuild the timestamp ourselves. The
@@ -40,8 +45,7 @@ object Tables {
     // conf is consulted again at scan execution, after this returns.)
     if (name == "events") ensureNanosAsLong(spark)
     val path = s"$sfDir/$name.parquet"
-    val schema = schemaCache.computeIfAbsent(path,
-      p => spark.read.parquet(p).schema)
+    val schema = cachedSchema(path)(spark.read.parquet(path).schema)
     val df = spark.read.schema(schema).parquet(path)
     normalizeNanoTs(df)
   }

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.streaming.StreamOps
+
 /** The fixture-read seam (`Tables.normalizeNanoTs`): both NTZ branches
   * — the UTC fast path (bare cast, zero per-row zone arithmetic) and
   * the general `convert_timezone` path a non-UTC launcher takes — must
@@ -55,5 +57,29 @@ class TablesSpec extends AnyFunSuite {
         assert(got == base, s"alias $alias diverged")
       } finally spark.conf.set(tzConf, "UTC")
     }
+  }
+
+  test("schema memo: a rewritten file reopens as a stream with its new schema after clearSchemaCache") {
+    import java.nio.file.{Files, StandardCopyOption}
+    val dir = Files.createTempDirectory("graft_tables_stream")
+    // one parquet file at dir/t.parquet, replaced in place
+    def writeAs(df: org.apache.spark.sql.DataFrame): Unit = {
+      val tmp = Files.createTempDirectory("graft_tables_stream_w").toString
+      df.coalesce(1).write.mode("overwrite").parquet(tmp)
+      val part = new java.io.File(tmp).listFiles()
+        .find(_.getName.endsWith(".parquet")).get
+      Files.copy(part.toPath, dir.resolve("t.parquet"),
+        StandardCopyOption.REPLACE_EXISTING)
+    }
+    writeAs(spark.range(3).toDF("id"))
+    assert(StreamOps.readParquetStream(spark, dir.toString, "t.parquet")
+      .columns.toSeq == Seq("id"))
+    writeAs(spark.range(3).selectExpr("id", "cast(id as string) as name"))
+    Tables.clearSchemaCache()
+    val reopened = StreamOps.readParquetStream(spark, dir.toString, "t.parquet")
+    assert(reopened.columns.toSeq == Seq("id", "name"))
+    val rows = StreamOps.drain(StreamOps.perBatch(reopened))(
+      _.collect().map(r => (r.getLong(0), r.getString(1))))
+    assert(rows.sorted == Seq((0L, "0"), (1L, "1"), (2L, "2")))
   }
 }
